@@ -177,9 +177,12 @@ def bpe_train_grouped(dfs: list, id_col: str, text_col: str,
     count-and-collect jobs) into one loop (n_merges jobs whose rows
     carry a group tag) — the per-round job is the same vocab-dict
     aggregate, just k small groups wide (guide §2.4/§5: the driver
-    round-trips, not the data volume, were the bill)."""
+    round-trips, not the data volume, were the bill).  No frames,
+    no tables: ``[]`` returns ``[]``."""
     from pyspark.sql import Window
 
+    if not dfs:
+        return []
     parts = [word_dict(df, text_col).select(
         F.lit(i).alias("_grp"), "word", "freq",
         _char_syms(F.col("word")).alias("syms"))

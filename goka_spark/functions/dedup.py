@@ -713,6 +713,12 @@ def ngram_jaccard_prefix(df: DataFrame, id_col: str, text_col: str,
     (~(1-t) of postings, rare ones), then exact |A∩B| via two
     candidate equi-joins — every join keyed, no cross product, linear
     in postings for a fixed threshold.
+
+    ``postings``, when given, must be DISTINCT ``(doc, sh)`` rows, as
+    :func:`shingle_postings` returns by default (``distinct=True``).
+    The verify counts |A∩B| as ``size(array_intersect)``, which
+    dedupes, while prefix ranks and set sizes count every row, so a
+    ``distinct=False`` frame would change the result silently.
     """
     eps = 1e-9  # keep ceil(t*sz) from rounding UP on float noise —
     #             a too-small ceil only lengthens the prefix (safe)

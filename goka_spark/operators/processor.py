@@ -46,12 +46,17 @@ class ProcessorResult:
     table: Optional[DataFrame]
     outputs: dict[str, DataFrame] = field(default_factory=dict)
     enriched: Optional[DataFrame] = None
+    _view: Optional[View] = field(default=None, init=False, repr=False,
+                                  compare=False)
 
     def view(self) -> View:
-        """goka.NewView over the group table (view.go:55)."""
+        """goka.NewView over the group table (view.go:55).  One View
+        per result, so repeated calls share one snapshot."""
         if self.table is None:
             raise ValueError("graph has no Persist edge")
-        return View(self.table, key_col=KEY)
+        if self._view is None:
+            self._view = View(self.table, key_col=KEY)
+        return self._view
 
     def visit(self, name: str) -> DataFrame:
         """Processor.VisitAllWithStats analog: apply the named visitor

@@ -26,9 +26,14 @@ Endpoints:
 
 Scale note: stats are computed by ONE Spark aggregation per request on
 the already-materialized result DataFrames; point queries go through
-``View.get`` (a pushed-down key filter).  For serving at high QPS the
-table belongs in a key-partitioned store — this server is the
-monitoring/debug surface, same as goka's.
+``View.get``, a dict lookup in the View's driver-local snapshot (the
+first query collects the table once, later ones run no Spark job).  An
+attached View therefore serves its table as of that first query; to
+follow a live table, attach a getter that builds a new View per query:
+``attach_source(name, lambda k: View(spark.table(t)).get(k))``.  For
+serving a table too large for the driver it belongs in a
+key-partitioned store — this server is the monitoring/debug surface,
+same as goka's.
 """
 
 from __future__ import annotations
@@ -489,7 +494,8 @@ class MonitorServer:
         self._processors[name] = result
 
     def attach_view(self, name: str, view: View) -> None:
-        """A View is both a monitorable source and a query getter."""
+        """A View is both a monitorable source and a query getter; it
+        serves its snapshot (see :mod:`goka_spark.operators.view`)."""
         self._sources[name] = view.get
         self._views.add(name)
 

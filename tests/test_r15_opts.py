@@ -183,3 +183,9 @@ def test_bpe_train_grouped_early_stop_is_per_group(spark):
                                      n_merges=6)
     assert grouped[1] == B.bpe_train(rich, "doc_id", "text", n_merges=6)
     assert len(grouped[0]) < len(grouped[1])
+
+
+def test_bpe_train_grouped_no_frames():
+    """No frames, no merge tables — not an IndexError."""
+    from goka_spark.functions import bpe as B
+    assert B.bpe_train_grouped([], "doc_id", "text") == []
