@@ -1150,7 +1150,8 @@ def embedding_dim_stats(emb: DataFrame, id_col: str,
 def cosine_threshold_sweep(df: DataFrame, id_col: str, vec_col: str,
                            thresholds=(0.3, 0.5, 0.7, 0.8, 0.9, 0.95),
                            bands: int = 8, bits: int = 8,
-                           base: "DataFrame | None" = None) -> DataFrame:
+                           base: "DataFrame | None" = None,
+                           base_threshold: "float | None" = None) -> DataFrame:
     """Cosine threshold-sensitivity curve — the embedding twin of
     ``jaccard_threshold_sweep`` (and of ``minhash_band_sweep``'s
     banding curve): pair volume and touched-vector count per
@@ -1172,14 +1173,22 @@ def cosine_threshold_sweep(df: DataFrame, id_col: str, vec_col: str,
     per band, ``bits`` grows with log₂ n); the sweep adds one
     6-row broadcast join + two hash-aggs over the pairs frame.
     """
-    # ``base``: the session-shared scored near-pairs frame at the
-    # LOWEST threshold (the _cos_pairs_lsh memo contract — the same
-    # frame dedup_embedding_cosine returns); built fresh when absent
-    # so the function stays standalone.
+    # ``base``: the session-shared scored near-pairs frame (the
+    # _cos_pairs_lsh memo contract — the same frame
+    # dedup_embedding_cosine returns), mined at ``base_threshold``;
+    # a mine above the lowest sweep threshold would under-report the
+    # lower buckets, so it is refused.  Built fresh when absent so the
+    # function stays standalone.
+    if (base is None) != (base_threshold is None):
+        raise ValueError("pass base and base_threshold together")
     if base is None:
         base = cosine_near_pairs_lsh(df, id_col, vec_col,
                                      threshold=min(thresholds),
                                      bands=bands, bits=bits)
+    elif base_threshold > min(thresholds):
+        raise ValueError(
+            f"base was mined at cos > {base_threshold}, above the lowest "
+            f"sweep threshold {min(thresholds)}")
     spark = df.sparkSession
     th = spark.createDataFrame(
         [(int(round(t * 10000)),) for t in sorted(thresholds)],

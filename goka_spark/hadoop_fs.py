@@ -7,7 +7,8 @@ path (``file:``, ``hdfs:``, ``s3a:``…), so local paths keep working
 unchanged while the same code runs where the data lives.
 
 Used by ``functions/ann_index.py`` (index artifacts),
-``operators/changelog.py`` (compaction claims) and
+``operators/changelog.py`` (compaction claims),
+``operators/emitter.py`` (one published file per flush) and
 ``streaming/runtime.py`` (ExactlyOnceBatchSink ledger).
 """
 
@@ -46,6 +47,29 @@ def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
 def exists(spark: SparkSession, path: str) -> bool:
     fs, _, p = hfs(spark, path)
     return bool(fs.exists(p))
+
+
+def publish_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` so that it appears whole or not at
+    all.  The bytes go to the hidden sibling ``.<name>`` first — Hadoop
+    and Spark file listings skip names starting with ``.`` — and are
+    then renamed into place: atomic on HDFS and local disks; on S3A a
+    one-file rename is a server-side copy whose target appears whole.
+    On any failure the hidden file is removed and ``path`` is never
+    created."""
+    fs, jvm, p = hfs(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(p.getParent(), "." + p.getName())
+    try:
+        stream = fs.create(tmp, False)  # creates parent dirs
+        try:
+            stream.write(data)
+        finally:
+            stream.close()
+        if not bool(fs.rename(tmp, p)):
+            raise IOError(f"rename {tmp.toString()} -> {path} failed")
+    except BaseException:
+        fs.delete(tmp, False)
+        raise
 
 
 def replace_file(spark: SparkSession, src: str, dst: str) -> None:

@@ -1,24 +1,33 @@
 """Emitter — append key/value records to a stream dataset.
 
-goka's Emitter (reference: /root/reference/emitter.go:28-124) sends
-single key/value messages to a topic, async (Emit → Promise) or sync
-(EmitSync).  Spark-first there are two modes:
+goka's Emitter (emitter.go:28-124) is a producer client: ``Emit``
+buffers a message, ``Finish`` waits for in-flight sends, and no cluster
+job runs per produce.  Spark-first there are two modes:
 
-- ``emit_dataframe(df)`` — the scale path: append a whole DataFrame
-  to the topic dataset (parquet append / any sink).
+- ``emit_dataframe(df)`` — the scale path: a distributed Spark write
+  appending a whole DataFrame to the topic dataset.
 - ``emit(key, value)`` / ``emit_sync`` — goka-API parity for driver
-  code & tests: buffered locally, flushed on ``finish()`` (mirrors
-  Emitter.Finish waiting for in-flight promises).
+  code: buffered locally, flushed on ``flush()`` / ``finish()``
+  (mirrors Emitter.Finish waiting for in-flight promises).  A flush
+  runs no Spark job: the driver builds ONE parquet file from the buffer
+  with Arrow and publishes it by rename (``hadoop_fs.publish_bytes``),
+  so a file-source stream over the topic sees a flush whole or not at
+  all — one flush, one micro-batch.
 """
 
 from __future__ import annotations
 
-import os
+import uuid
 from typing import Any, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
 
+from goka_spark import hadoop_fs
 from goka_spark.codecs import Codec
 
 
@@ -78,24 +87,40 @@ class Emitter:
         self._closed = True
 
     def flush(self) -> None:
-        """Flush buffered records without closing.
-        If any record carries headers the topic schema grows a
-        ``headers map<string,binary>`` column (headers.go:8)."""
+        """Flush buffered records without closing, as ONE new parquet
+        file ``part-<uuid4>.parquet`` in the topic directory.  No Spark
+        job runs: Spark's own local-data conversion (the one Spark
+        Connect's ``createDataFrame`` uses) turns the buffer into an
+        Arrow table of the topic schema ``key string, <value_col>
+        <codec type>`` — plus ``headers map<string,binary>``
+        (headers.go:8) when any record carries headers — with
+        microsecond timestamps; the driver serialises it and publishes
+        it by rename, so stream readers see the whole flush or none of
+        it.  If the buffer does not convert (a value outside its codec
+        type) or the write fails, this raises and leaves both the
+        buffer and the topic unchanged."""
         if not self._buffer:
             return
-        vt = self.codec.spark_type.simpleString() if self.codec else "string"
-        schema = f"key string, {self.value_col} {vt}"
+        fields = [T.StructField("key", T.StringType()),
+                  T.StructField(self.value_col,
+                                self.codec.spark_type if self.codec else T.StringType())]
         if any(h is not None for _, _, h in self._buffer):
-            schema += ", headers map<string,binary>"
+            fields.append(T.StructField(
+                "headers", T.MapType(T.StringType(), T.BinaryType())))
             rows = self._buffer
         else:
             rows = [(k, v) for k, v, _ in self._buffer]
-        df = self.spark.createDataFrame(rows, schema=schema)
-        df.write.mode("append").parquet(self.topic_path)
+        table = LocalDataToArrowConversion.convert(
+            rows, T.StructType(fields), use_large_var_types=False)
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        hadoop_fs.publish_bytes(
+            self.spark, hadoop_fs.uri_join(self.topic_path, f"part-{uuid.uuid4()}.parquet"),
+            sink.getvalue().to_pybytes())
         self._buffer = []
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.topic_path)
 
     def exists(self) -> bool:
-        return os.path.exists(self.topic_path)
+        return hadoop_fs.exists(self.spark, self.topic_path)

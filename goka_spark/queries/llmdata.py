@@ -837,6 +837,7 @@ def tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
 #: (the r14 verdict ask-3 billing contract).  appId in the key — the
 #: localCheckpoint dies with its SparkContext.
 _COS_PAIRS_MEMO: dict = {}
+_COS_PAIRS_THRESHOLD = 0.3
 
 
 def _cos_pairs_lsh(spark: SparkSession, sf: str) -> DataFrame:
@@ -844,7 +845,7 @@ def _cos_pairs_lsh(spark: SparkSession, sf: str) -> DataFrame:
     if key not in _COS_PAIRS_MEMO:
         emb = load(spark, sf, "embeddings")["embeddings"]
         _COS_PAIRS_MEMO[key] = S.cosine_near_pairs_lsh(
-            emb, "vec_id", "embedding", threshold=0.3,
+            emb, "vec_id", "embedding", threshold=_COS_PAIRS_THRESHOLD,
             bands=8, bits=8).localCheckpoint(eager=False)
     return _COS_PAIRS_MEMO[key]
 
@@ -8348,7 +8349,8 @@ def cosine_threshold_sweep(spark: SparkSession, sf: str) -> DataFrame:
     # dedup_embedding_cosine returns — ride the session memo instead
     # of re-running the banded join + exact verify (guide §2.4)
     return S.cosine_threshold_sweep(emb, "vec_id", "embedding",
-                                    base=_cos_pairs_lsh(spark, sf))
+                                    base=_cos_pairs_lsh(spark, sf),
+                                    base_threshold=_COS_PAIRS_THRESHOLD)
 
 
 QUERIES["cosine_threshold_sweep"] = cosine_threshold_sweep

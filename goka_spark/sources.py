@@ -35,15 +35,6 @@ def read_topic(spark: SparkSession, path: str, fmt: str = "parquet",
     return reader.format(fmt).options(**options).load(path)
 
 
-def write_topic(df: DataFrame, path: str, fmt: str = "parquet",
-                mode: str = "append", partition_by: Optional[list[str]] = None,
-                **options) -> None:
-    w = df.write.format(fmt).mode(mode).options(**options)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
 def write_topic_partitioned(df: DataFrame, path: str, by: list[str],
                             fmt: str = "parquet", mode: str = "append") -> None:
     """Hive-partitioned topic layout (``path/col=val/...``) — the lake

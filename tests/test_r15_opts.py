@@ -149,9 +149,27 @@ def test_cosine_sweep_rides_pairs_memo(spark, sf_dir):
 
     standalone = S.cosine_threshold_sweep(emb, "vec_id", "embedding")
     via_memo = S.cosine_threshold_sweep(emb, "vec_id", "embedding",
-                                        base=memo_pairs)
+                                        base=memo_pairs, base_threshold=0.3)
     assert sorted(map(tuple, standalone.collect())) == \
         sorted(map(tuple, via_memo.collect()))
+
+
+def test_cosine_sweep_rejects_base_mined_too_high(spark):
+    """A base mined above the lowest sweep threshold would under-report
+    the lower buckets; base and its threshold come together.  Both
+    are refused before any plan is built."""
+    from goka_spark.functions import similarity as S
+    emb = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    base = spark.createDataFrame([], "id_a long, id_b long, cos double")
+    with pytest.raises(ValueError, match="above the lowest"):
+        S.cosine_threshold_sweep(emb, "vec_id", "embedding", base=base,
+                                 base_threshold=0.5)
+    with pytest.raises(ValueError, match="together"):
+        S.cosine_threshold_sweep(emb, "vec_id", "embedding", base=base)
+    with pytest.raises(ValueError, match="together"):
+        S.cosine_threshold_sweep(emb, "vec_id", "embedding", base_threshold=0.3)
+    S.cosine_threshold_sweep(emb, "vec_id", "embedding", thresholds=(0.5, 0.9),
+                             base=base, base_threshold=0.5)
 
 
 def test_bpe_train_grouped_matches_independent_loops(spark, sf_dir):
