@@ -21,6 +21,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from goka_spark import get_session
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.functions import dedup as D
 from goka_spark.functions import text as T
@@ -35,7 +36,7 @@ docs = load(spark, sf, "documents")["documents"]
 
 # ---- build-or-load the index (keyed by data fingerprint) ----
 cache = tempfile.mkdtemp()
-fp = A.dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
+fp = dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
 idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                       fingerprint=fp, cache_dir=cache)
 print("index at", idx.path)

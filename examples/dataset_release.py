@@ -38,6 +38,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from goka_spark import get_session
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.functions import corpus as C
 from goka_spark.functions import dedup as D
@@ -107,7 +108,7 @@ print(f"contrastive positives from dedup byproduct: {pos.count()} pairs")
 # 5. maintenance: compact an append-fragmented index ------------------
 with tempfile.TemporaryDirectory() as tmp:
     base = emb.filter(F.col("vec_id") < 300)
-    fp = A.dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
     idx = A.build_or_load(spark, base, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=tmp)
     A.append_vectors(idx, emb.filter(F.col("vec_id") >= 300),

@@ -18,6 +18,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from goka_spark import get_session
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.queries.base import load
 from goka_spark.streaming.runtime import stream_from_dir
@@ -30,7 +31,7 @@ emb = load(spark, sf, "embeddings")["embeddings"]
 
 # ---- index the seed corpus (caller-owned dir => appendable) ----
 cache = tempfile.mkdtemp()
-fp = A.dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
+fp = dataset_fingerprint(os.path.join(sf, "embeddings.parquet"))
 idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                       fingerprint=fp, cache_dir=cache)
 n0 = idx.codes().count()

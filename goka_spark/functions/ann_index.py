@@ -16,10 +16,10 @@ Two scale fixes over calling the ``similarity`` functions ad hoc:
    IVFPQ).  Previously the scan read every code row and masked with
    ``np.isin`` — correct compute pruning, no IO pruning.
 
-The index is keyed by (dataset fingerprint, quantizer params): a
-testdata regeneration or a param change invalidates the cache
-automatically.  Builds go to a temp dir then atomically rename into
-place (single-writer per machine; concurrent losers adopt the
+The index is keyed by (``artifacts.dataset_fingerprint``, quantizer
+params): a testdata regeneration or a param change invalidates the
+cache automatically.  Builds go to a temp dir then atomically rename
+into place (single-writer per machine; concurrent losers adopt the
 winner's index).
 
 Reference parity: goka persists processor state as a recoverable
@@ -29,7 +29,6 @@ ANN index and recovery is a cache hit.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import os
 from dataclasses import dataclass
@@ -71,42 +70,6 @@ from goka_spark.hadoop_fs import (  # noqa: E402
     uri_join as _join,
     write_bytes as _write_bytes,
 )
-
-
-def dataset_fingerprint(path: str, spark: "SparkSession | None" = None) -> str:
-    """Cheap content fingerprint of a parquet file/dir: hash of the
-    sorted (relative path, size, mtime_millis) listing via the Hadoop
-    FS (works on HDFS/S3 object listings, not just local disk).
-    Changes whenever the driver regenerates testdata — stale indexes
-    self-invalidate.  Falls back to os.walk when no Spark session is
-    alive (pure-local tooling)."""
-    h = hashlib.md5()
-    spark = spark or SparkSession.getActiveSession()
-    if spark is not None:
-        fs, _, p = _hfs(spark, path)
-        base = p.toUri().getPath() or ""
-        entries = []
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            rel = st.getPath().toUri().getPath()
-            if rel.startswith(base):
-                rel = rel[len(base):].lstrip("/")
-            entries.append(
-                f"{rel}:{st.getLen()}:{st.getModificationTime()}\n")
-        for e in sorted(entries):
-            h.update(e.encode())
-    elif os.path.isdir(path):
-        for root, _, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                h.update(f"{os.path.relpath(p, path)}:{st.st_size}:"
-                         f"{st.st_mtime_ns // 1_000_000}\n".encode())
-    else:
-        st = os.stat(path)
-        h.update(f":{st.st_size}:{st.st_mtime_ns // 1_000_000}\n".encode())
-    return h.hexdigest()[:16]
 
 
 def adaptive_n_cells(n_rows: int, lo: int = 16, hi: int = 65536) -> int:

@@ -824,10 +824,10 @@ def dup_ngram_coverage(df: DataFrame, id_col: str, text_col: str,
     blow-up — this is the cheap signal you compute on all 100 TB,
     reserving pair mining for the flagged tail."""
     # ``sh``/``dfc``: session-shared distinct postings and their df
-    # aggregate (the _SH_MEMO contract — the span family's positioned
-    # memo deduped on (doc, sh) is value-identical to the distinct
-    # kernel output); built fresh when absent so the function stays
-    # standalone.
+    # aggregate (the llmdata._sh_postings artifact — the span family's
+    # positioned _pos_postings artifact deduped on (doc, sh) is
+    # value-identical to the distinct kernel output); built fresh when
+    # absent so the function stays standalone.
     if sh is None:
         sh = (shingle_postings(df, id_col, text_col, n)
               .repartition("sh"))
@@ -870,8 +870,9 @@ def dup_span_extract(df: DataFrame, id_col: str, text_col: str,
     windows whose partitions are bounded by document length — linear
     in postings, no self-join."""
     # ``pos_sh``/``dfc``: session-shared positioned postings and their
-    # per-shingle df aggregate (the _SH_MEMO contract) — built fresh
-    # when absent so the function stays standalone.
+    # per-shingle df aggregate (the llmdata._pos_postings / _pos_dfc
+    # artifacts) — built fresh when absent so the function stays
+    # standalone.
     if pos_sh is None:
         pos_sh = shingle_postings(df, id_col, text_col, n,
                                   positions=True).repartition("sh")
@@ -925,8 +926,8 @@ def minhash_containment_est(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("bands must divide num_perm")
     r = num_perm // bands
     # ``sigs``/``sizes``: session-shared signature and set-size frames
-    # (the _MINHASH_SIG_MEMO / _SZ_MEMO contract) — built fresh when
-    # absent so the function stays standalone.
+    # (the llmdata._minhash_sigs / _sh_sizes artifacts) — built fresh
+    # when absent so the function stays standalone.
     if sigs is None:
         sigs = minhash_signatures(df, id_col, text_col, num_perm,
                                   shingle, base_hash)

@@ -13,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.queries.base import load
 
@@ -25,7 +26,7 @@ def appended(spark, sf_dir, tmp_path_factory):
     base = emb.filter(F.col("vec_id") < SPLIT)
     batch = emb.filter(F.col("vec_id") >= SPLIT)
     cache = str(tmp_path_factory.mktemp("ann_inc"))
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, base, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=cache)
     n = A.append_vectors(idx, batch, "vec_id", "embedding")
@@ -93,7 +94,7 @@ def test_compact_preserves_rows_and_pruning(spark, sf_dir, tmp_path_factory):
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
     base = emb.filter(F.col("vec_id") < 200)
     cache = str(tmp_path_factory.mktemp("ann_compact"))
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, base, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=cache)
     for lo in (200, 300, 400):

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.queries.base import load
 
@@ -20,7 +21,7 @@ DROP = [3, 7, 11, 42]
 def deleted(spark, sf_dir, tmp_path_factory):
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
     cache = str(tmp_path_factory.mktemp("ann_del"))
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=cache)
     ids = spark.createDataFrame([(i,) for i in DROP], "vec_id long")
@@ -63,7 +64,7 @@ def test_compact_applies_and_clears_tombstones(spark, deleted):
 
 def test_delete_refuses_shared_cache(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                           fingerprint=fp)
     ids = spark.createDataFrame([(1,)], "vec_id long")

@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.functions import similarity as S
 from goka_spark.queries.base import load
@@ -18,7 +19,7 @@ from goka_spark.queries.base import load
 def index(spark, sf_dir, tmp_path_factory):
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
     cache = str(tmp_path_factory.mktemp("ann_cache"))
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=cache)
     return idx, emb, cache, fp
@@ -113,9 +114,9 @@ def test_artifact_io_via_hadoop_fs_uri(spark, sf_dir, index, tmp_path,
 
     idx, emb, _, _ = index
     cache_uri = "file:" + str(tmp_path / "ann_cache_uri")
-    fp = A.dataset_fingerprint(
+    fp = dataset_fingerprint(
         "file:" + os.path.join(sf_dir, "embeddings.parquet"), spark=spark)
-    assert fp == A.dataset_fingerprint(
+    assert fp == dataset_fingerprint(
         os.path.join(sf_dir, "embeddings.parquet"), spark=spark)
     built = A.build_or_load(spark, emb, "vec_id", "embedding",
                             fingerprint=fp, cache_dir=cache_uri)
@@ -144,9 +145,9 @@ def test_artifact_io_via_hadoop_fs_uri(spark, sf_dir, index, tmp_path,
 def test_fingerprint_tracks_mtime(tmp_path):
     p = tmp_path / "d.parquet"
     p.write_bytes(b"x" * 10)
-    f1 = A.dataset_fingerprint(str(p))
+    f1 = dataset_fingerprint(str(p))
     os.utime(p, ns=(1, 2))
-    assert A.dataset_fingerprint(str(p)) != f1
+    assert dataset_fingerprint(str(p)) != f1
 
 
 def test_semantic_near_pairs_subset_of_full_lsh(spark, sf_dir, index):

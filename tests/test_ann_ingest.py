@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from goka_spark.artifacts import dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.queries.base import load
 
@@ -19,7 +20,7 @@ THRESH = 0.99
 @pytest.fixture()
 def idx(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
-    fp = A.dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    fp = dataset_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     idx = A.build_or_load(spark, emb, "vec_id", "embedding",
                           fingerprint=fp, cache_dir=str(tmp_path))
     return idx, emb

@@ -698,22 +698,24 @@ def test_event_volume_anomalies_planted_spike(spark, monkeypatch,
 
 
 def test_keep_memo_keyed_by_application_id(spark, sf_dir):
-    """Session-lifetime memo discipline (ADVICE r7): _KEEP_MEMO caches
+    """Session-lifetime memo discipline (ADVICE r7): the keep frame is
     a localCheckpoint()ed frame that dies with its SparkContext, so
-    the memo key MUST include the applicationId — a frame cached under
+    the artifact store checks the applicationId — an entry built under
     a previous (stopped) session's appId must not be returned after a
-    restart.  Simulated restart: seed the memo under a foreign appId
-    and assert _keep_frame computes a fresh frame instead of
-    returning the stale sentinel."""
+    restart.  Simulated restart: plant the entry under a foreign appId
+    and assert _keep_frame computes a fresh frame and replaces the
+    entry with it (one entry per artifact and sf)."""
+    from goka_spark import artifacts
     from goka_spark.queries import llmdata as L
 
+    key = ("_keep_frame", sf_dir, ())
+    fp = (artifacts.dataset_fingerprint(f"{sf_dir}/documents.parquet"),)
     sentinel = object()
-    L._KEEP_MEMO.clear()
-    L._KEEP_MEMO[("app-from-a-dead-context", sf_dir)] = sentinel
-    try:
-        got = L._keep_frame(spark, sf_dir)
-        assert got is not sentinel
-        assert (spark.sparkContext.applicationId, sf_dir) in L._KEEP_MEMO
-        assert got.count() > 0              # live, actionable frame
-    finally:
-        L._KEEP_MEMO.pop(("app-from-a-dead-context", sf_dir), None)
+    artifacts._STORE[key] = ("app-from-a-dead-context", fp, sentinel)
+    got = L._keep_frame(spark, sf_dir)
+    assert got is not sentinel
+    app, kept_fp, value = artifacts._STORE[key]
+    assert (app, kept_fp) == (spark.sparkContext.applicationId, fp)
+    assert value is got
+    assert [k for k in artifacts._STORE if k[:2] == key[:2]] == [key]
+    assert got.count() > 0              # live, actionable frame

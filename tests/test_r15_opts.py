@@ -176,7 +176,7 @@ def test_bpe_train_grouped_matches_independent_loops(spark, sf_dir):
     """The grouped trainer (one pair-count job per round for all
     groups) returns exactly the merges of one bpe_train loop per
     frame — full corpus + both C175 md5-slot halves, the real
-    warm_tokenizers composition."""
+    _bpe_grouped composition."""
     from goka_spark.functions import bpe as B
     docs = load(spark, sf_dir, "documents")["documents"]
     slot = llmdata._half_slot()

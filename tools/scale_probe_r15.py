@@ -75,20 +75,15 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    from goka_spark.queries import all_queries
-    from goka_spark.queries.llmdata import (_ann_index,
-                                            warm_graph_artifacts,
-                                            warm_tokenizers)
-    from goka_spark.queries.base import load
+    from goka_spark.artifacts import warm
+    from goka_spark.queries import all_queries, llmdata
     qs = all_queries()
 
     results = {}
     for f in factors:
         d = build_sfdir(spark, f)
         t0 = time.time()
-        warm_tokenizers(spark, d)
-        warm_graph_artifacts(spark, d)
-        _ann_index(spark, d, load(spark, d, "embeddings")["embeddings"])
+        warm(spark, d, llmdata.WARM)
         warm_s = round(time.time() - t0, 2)
         print(f"x{f} warm (uncounted): {warm_s}s", flush=True)
         r = {"_warm_uncounted": warm_s}

@@ -23,10 +23,9 @@ def main() -> None:
                 sys.argv.index(a) + 1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from goka_spark.queries import all_queries
+    from goka_spark.artifacts import warm
+    from goka_spark.queries import all_queries, llmdata
     from goka_spark.queries.base import load
-    from goka_spark.queries.llmdata import (_ann_index, warm_graph_artifacts,
-                                            warm_tokenizers)
     from goka_spark.session import get_session
 
     spark = get_session("time_query")
@@ -41,11 +40,9 @@ def main() -> None:
     load(spark, sf_dir, "embeddings")["embeddings"].limit(64) \
         .mapInPandas(lambda it: it, "vec_id long, embedding array<float>") \
         .write.format("noop").mode("overwrite").save()
-    _ann_index(spark, sf_dir, load(spark, sf_dir, "embeddings")["embeddings"])
+    warm(spark, sf_dir, llmdata.WARM)
     qs["embedding_ivf_ann"](spark, sf_dir) \
         .write.format("noop").mode("overwrite").save()
-    warm_tokenizers(spark, sf_dir)
-    warm_graph_artifacts(spark, sf_dir)
 
     for name in args:
         spark.sparkContext.setJobDescription(f"time: {name}")
