@@ -3,8 +3,8 @@ training run, composed from round-6 operators —
 
   1. quality gates: Gopher repetition rules + C4 line rules
   2. CCNet perplexity terciles (train on `head`, as CCNet does)
-  3. BPE vocabulary trained ON the surviving corpus (distributed
-     pair-count rounds over the word dict, JVM-fold merges)
+  3. BPE vocabulary trained ON the surviving corpus (one word-dict
+     collect, merges trained on the driver)
   4. vocabulary coverage check (OOV rate per doc)
   5. deterministic shuffle + token-budget shard packing
 

@@ -1,7 +1,7 @@
 """Both tokenizer families end to end — train, encode, compare:
 
-  1. BPE (functions/bpe.py): merges trained as distributed pair-count
-     rounds over the word dict; batched mode accepts up to m
+  1. BPE (functions/bpe.py): merges trained on the driver over the
+     collected word dict; batched mode accepts up to m
      symbol-disjoint merges per round for vocab-scale training.
   2. Unigram LM (functions/unigram.py): SentencePiece-family hard-EM
      with exact integer micro-nat Viterbi costs.

@@ -143,13 +143,6 @@ def artifact(*tables: str):
     return lambda build: _Artifact(build, tables)
 
 
-def seed(getter: _Artifact, value, *args, **kwargs) -> None:
-    """Store ``value`` as ``getter(*args, **kwargs)``'s entry, for a
-    build that yields several artifacts at once."""
-    key, stamp = getter.locate(args, kwargs)
-    _STORE[key] = (*stamp, value)
-
-
 def warm(spark: SparkSession, sf: str, names) -> dict:
     """Build each named artifact of ``sf`` that is not already current,
     forcing frames with ``count()``.  An item of ``names`` is a getter

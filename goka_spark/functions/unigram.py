@@ -1,5 +1,5 @@
-"""Distributed unigram-LM tokenizer — the SentencePiece-family twin
-of the BPE trainer (functions/bpe.py).
+"""Unigram-LM tokenizer — the SentencePiece-family twin of the BPE
+trainer (functions/bpe.py).
 
 Unigram subword modeling (Kudo 2018, "Subword Regularization", §3.2):
 score every candidate piece by a unigram language model and segment
@@ -9,20 +9,19 @@ exact integers (micro-nats, ``floor(1e6·ln(total/count) + 0.5)``) and
 the Viterbi tie-break is total — (cost, n_pieces, piece sequence) —
 so the trained vocabulary and every segmentation are a pure function
 of the word-frequency dict, recomputable bit-identically in pure
-Python, Spark, or any engine (the recomputable-merges idiom of
-``bpe_train`` applied to an EM loop).
+Python or any engine.
 
-Distribution contract (same as BPE): at 100 TB the corpus is huge but
-the distinct-word dict is vocabulary-sized, so
+Training follows BPE: at 100 TB the corpus is huge but the
+distinct-word dict is vocabulary-sized, so
 
-  seed      = one substring explode + hash-agg over the DICT
-              (never the corpus), top-k TakeOrdered to the driver
-  E-step    = Viterbi over the DICT under broadcast integer costs
-              (Arrow-batched pandas UDF — Python is fine here, the
-              dict is small; the corpus never reaches Python)
-  M-step    = piece-usage hash-agg over the segmented dict, pruned
-              driver-side (piece-table-sized collects only)
-  tokenize  = ONE broadcast word→tokens join over the corpus
+  train     = ONE word-dict collect through Arrow (bounded by
+              ``bpe.MAX_DICT_WORDS``, else ValueError), then
+              :func:`train_py` on the driver: substring seed and
+              n_iters × (Viterbi E-step, usage M-step, prune) with no
+              Spark job per EM iteration
+  tokenize  = Viterbi over the DICT under broadcast integer costs
+              (Arrow-batched pandas UDF), then ONE broadcast
+              word→tokens join over the corpus
 
 Reference parity: goka's codec interface (codec.go:1) turns values
 into wire symbols; the unigram model is the second codec family next
@@ -38,7 +37,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from goka_spark.functions.bpe import word_dict
+from goka_spark.functions.bpe import collect_word_dict, word_dict
 
 #: default hyperparameters — small enough for bench, the shapes are
 #: what scale: none of these ever multiplies the corpus
@@ -49,8 +48,8 @@ N_ITERS = 3
 
 
 # ------------------------------------------------------------ python
-# Pure twins — the oracle re-trains with these; property tests pin
-# the Spark path against them.
+# The driver-side trainer and Viterbi; the oracle re-trains with the
+# same functions.
 
 def _cost_e6(count: int, total: int) -> int:
     """Integer micro-nat cost: floor(1e6·ln(total/count) + 0.5)."""
@@ -134,69 +133,17 @@ def train_py(word_freq: dict, vocab_target: int = VOCAB_TARGET,
     return pieces
 
 
-def encode_word_py(word: str, pieces: dict,
-                   max_len: int = MAX_PIECE_LEN) -> list:
-    return viterbi_py(word, piece_costs(pieces), max_len)
-
-
 # ------------------------------------------------------------- spark
-
-def _substrings(word, max_len: int):
-    """All (overlapping) substrings up to ``max_len`` as one array —
-    Column.substr takes Column args, so this stays JVM-side."""
-    return F.flatten(F.transform(
-        F.sequence(F.lit(1), F.length(word)),
-        lambda i: F.transform(
-            F.sequence(F.lit(1),
-                       F.least(F.lit(max_len), F.length(word) - i + 1)),
-            lambda L: word.substr(i, L))))
-
 
 def unigram_train(df: DataFrame, id_col: str, text_col: str,
                   vocab_target: int = VOCAB_TARGET,
                   seed_size: int = SEED_SIZE, n_iters: int = N_ITERS,
                   max_len: int = MAX_PIECE_LEN) -> dict:
-    """Distributed trainer; returns the final {piece: count}.
-
-    Every collect is piece-table-sized and explicitly bounded: the
-    seed is a TakeOrdered(seed_size) plus the alphabet, each E-step
-    usage table is ≤ the current vocab.  The corpus appears exactly
-    once (inside ``word_dict``'s hash-agg)."""
-    wd = word_dict(df, text_col).localCheckpoint()  # reused n_iters+1×
-
-    subs = (wd.select(F.explode(
-                _substrings(F.col("word"), max_len)).alias("piece"),
-                F.col("freq"))
-            .groupBy("piece").agg(F.sum("freq").alias("cnt")))
-    # bounded-collect discipline: the alphabet is the one frame here
-    # without a structural cap — guard it loudly instead of OOMing
-    alphabet_cap = 100_000
-    char_rows = (subs.filter(F.length("piece") == 1)
-                 .limit(alphabet_cap + 1).collect())
-    if len(char_rows) > alphabet_cap:
-        raise ValueError(
-            f"alphabet exceeds {alphabet_cap} distinct characters — "
-            "not natural-language text; refusing the driver collect")
-    chars = {r["piece"]: r["cnt"] for r in char_rows}
-    multi = {r["piece"]: r["cnt"]
-             for r in subs.filter(F.length("piece") > 1)
-             .orderBy(F.col("cnt").desc(), F.col("piece"))
-             .limit(seed_size).collect()}
-    pieces = dict(chars)
-    pieces.update(multi)
-
-    for _ in range(n_iters):
-        seg = _segment(wd, pieces, max_len)
-        usage = {r["piece"]: r["u"] for r in
-                 (seg.select(F.explode("tokens").alias("piece"), "freq")
-                  .groupBy("piece").agg(F.sum("freq").alias("u"))
-                  .collect())}
-        ch = {p: max(usage.get(p, 0), 1) for p in pieces if len(p) == 1}
-        mu = sorted(((p, c) for p, c in usage.items() if len(p) > 1),
-                    key=lambda kv: (-kv[1], kv[0]))[:vocab_target]
-        pieces = dict(ch)
-        pieces.update(mu)
-    return pieces
+    """Train on the corpus word dict (one bounded collect, see
+    ``bpe.collect_word_dict``) with :func:`train_py`; returns the final
+    {piece: count}."""
+    return train_py(collect_word_dict(df, text_col), vocab_target,
+                    seed_size, n_iters, max_len)
 
 
 def _segment(wd: DataFrame, pieces: dict, max_len: int) -> DataFrame:

@@ -205,10 +205,6 @@ def last_by(value: Column, order: Column) -> Column:
     return F.max_by(value, order)
 
 
-def first_by(value: Column, order: Column) -> Column:
-    return F.min_by(value, order)
-
-
 def latest_n_list(value: Column, order: Column, n: int) -> Column:
     """Latest-N collector state (goka examples/3-messaging collector):
     keep the last ``n`` values per key ordered by event time.

@@ -23,10 +23,6 @@ def write_bucketed(df: DataFrame, table_name: str, key: str = "key",
     w.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
                   key: str = "key", how: str = "inner") -> DataFrame:
     """Join two same-bucketed tables — plan contains no Exchange."""

@@ -51,7 +51,3 @@ def has_partial_aggregation(df: DataFrame) -> bool:
     """Map-side combine: HashAggregate appears both before and after
     the exchange (keys=..., functions=[partial_...] then [...])."""
     return "partial_" in simple(df)
-
-
-def codegen_stages(df: DataFrame) -> int:
-    return len(set(re.findall(r"\*\((\d+)\)", simple(df))))

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goka_spark.artifacts import artifact, dataset_fingerprint, seed
+from goka_spark.artifacts import artifact, dataset_fingerprint
 from goka_spark.functions import ann_index as A
 from goka_spark.functions import corpus as C
 from goka_spark.functions import dedup as D
@@ -338,14 +338,14 @@ def dedup_exact_prioritized(spark: SparkSession, sf: str) -> DataFrame:
 
 def bpe_token_count(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc token counts under a corpus-trained BPE vocabulary
-    (functions/bpe.py): training is 16 distributed pair-count rounds
-    over the word dict, merge application is a JVM array fold, and
-    the corpus pass is one broadcast word→n_tokens join.  Fully
-    hash-verified although BPE is an iterative algorithm: merges are
-    a pure function of (word dict, tie order), so the oracle
-    re-trains them in pure Python and verifies counts via a literal
-    vocabulary table — the recomputable-quantizer idiom extended to
-    subword training."""
+    (functions/bpe.py): training is one word-dict collect plus 16
+    merges on the driver, the dict is encoded by one Arrow-batched
+    map, and the corpus pass is one broadcast word→n_tokens join.
+    Fully hash-verified although BPE is an iterative algorithm:
+    merges are a pure function of (word dict, tie order), so the
+    oracle re-trains them in pure Python and verifies counts via a
+    literal vocabulary table — the recomputable-quantizer idiom
+    extended to subword training."""
     from goka_spark.functions import bpe as B
 
     docs = load(spark, sf, "documents")["documents"]
@@ -381,8 +381,7 @@ def _uni_pieces(docs: DataFrame, sf: str) -> dict:
 
 
 def _half_slot() -> F.Column:
-    """The md5 resampling slot C175 splits the corpus on — one
-    definition shared by _half_merges and _bpe_grouped."""
+    """The md5 resampling slot C175 splits the corpus on."""
     return F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
         16, 10).cast("long") % 100
@@ -401,26 +400,6 @@ def _half_merges(docs: DataFrame, sf: str, n_merges: int = 16) -> tuple:
                         n_merges=n_merges))
 
 
-@artifact("documents")
-def _bpe_grouped(docs: DataFrame, sf: str, n_merges: int = 16) -> tuple:
-    """The classic full-corpus table and the two C175 half-corpus
-    tables in ONE grouped training loop (16 pair-count jobs instead of
-    48), seeding the _bpe_merges and _half_merges entries.  Merge-
-    identical to the independent loops those getters run when cold
-    (pinned by tests/test_r15_opts.py::test_bpe_train_grouped_*).
-    Only ``warm`` builds it, so a cold bpe_token_count still trains
-    the full-corpus table alone."""
-    from goka_spark.functions import bpe as B
-
-    slot = _half_slot()
-    full, ha, hb = B.bpe_train_grouped(
-        [docs, docs.filter(slot < 50), docs.filter(slot >= 50)],
-        "doc_id", "text", n_merges=n_merges)
-    seed(_bpe_merges, full, docs, sf, n_merges)
-    seed(_half_merges, (ha, hb), docs, sf, n_merges)
-    return full, ha, hb
-
-
 #: the artifacts ``artifacts.warm`` builds before bench.py and the
 #: tools time any query, so each timed row measures apply cost and no
 #: row pays a build because of sweep order (r7/r9 verdicts; r9:
@@ -431,7 +410,7 @@ def _bpe_grouped(docs: DataFrame, sf: str, n_merges: int = 16) -> tuple:
 #: the build (the r14 verdict ask-3 billing contract).
 WARM = (
     "_ann_index",
-    "_bpe_grouped", "_bpe_batched", "_uni_pieces",
+    "_bpe_merges", "_half_merges", "_bpe_batched", "_uni_pieces",
     "_jaccard_cc", "_keep_frame", "_gate_signals", "_simhash_md5",
     "_minhash_sigs", ("_minhash_sigs", {"num_perm": 16, "base_hash": "md5"}),
     "_paragraph_sigs", "_para_keep_frame",
@@ -444,10 +423,10 @@ def unigram_token_count(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc token counts under a corpus-trained unigram-LM
     vocabulary (functions/unigram.py — the SentencePiece-family twin
     of BPE, hard-EM with integer micro-nat Viterbi costs): training
-    is a substring-seed hash-agg + 3 EM rounds over the word DICT,
-    the corpus pass is one broadcast word→n_tokens join.  Fully
-    hash-verified: pieces are a pure function of (word dict,
-    hparams), so the oracle re-trains them in pure Python and
+    is one word-dict collect, then the substring seed and 3 EM rounds
+    on the driver; the corpus pass is one broadcast word→n_tokens
+    join.  Fully hash-verified: pieces are a pure function of (word
+    dict, hparams), so the oracle re-trains them in pure Python and
     verifies counts via a literal vocabulary table."""
     from goka_spark.functions import unigram as U
 
@@ -470,12 +449,12 @@ def unigram_encode_docs(spark: SparkSession, sf: str) -> DataFrame:
 def bpe_token_count_batched(spark: SparkSession, sf: str) -> DataFrame:
     """The r7 vocab-scale trainer, driver-verified end to end: 48
     merges trained with bpe_train_batched (up to 8 symbol-disjoint
-    pairs per pair-count job — ~n/8 driver rounds instead of one job
-    per merge), counts via the same broadcast word→n_tokens corpus
-    pass.  The oracle re-trains the SAME batched algorithm in pure
-    Python (train_batched_py, property-pinned to the Spark rounds)
-    — the recomputable-merges idiom covering the scale mode, not
-    just the classic loop."""
+    pairs per pair-count round, on the driver over the collected
+    word dict), counts via the same broadcast word→n_tokens corpus
+    pass.  The oracle re-trains the SAME batched algorithm
+    (train_batched_py) from DuckDB's word dict — the
+    recomputable-merges idiom covering the scale mode, not just the
+    classic trainer."""
     from goka_spark.functions import bpe as B
 
     docs = load(spark, sf, "documents")["documents"]
@@ -2897,9 +2876,10 @@ ORACLES["quantized_recall_eval"] = _quantized_recall_oracle
 
 
 def _tokenizer_stability_oracle(n_merges: int = 16) -> str:
-    """Retrain both halves bit-identically in Python (train_py ==
-    the Spark rounds — the C67 recomputability contract) and embed
-    the expected comparison table as literals."""
+    """Retrain both halves with train_py from DuckDB's word dicts
+    (bpe_train's incremental trainer is pinned to train_py by tests —
+    the C67 recomputability contract) and embed the expected
+    comparison table as literals."""
     import duckdb
 
     from goka_spark.functions import bpe as B
@@ -4009,10 +3989,10 @@ ORACLES["dedup_exact_prioritized"] = """
 
 def _bpe_oracle(n_merges: int = 16, batch: "int | None" = None) -> str:
     """DuckDB twin of bpe_token_count: re-train bit-identical merges
-    in pure Python from the same word dict (train_py == the Spark
-    rounds — pinned by tests), apply them to the vocabulary, embed
-    the word→n_tokens table as literals, and replay the per-doc sum
-    in SQL.  ``batch`` retrains with the batched twin instead (the
+    with train_py from DuckDB's word dict (bpe_train's incremental
+    trainer is pinned to it by tests), apply them to the vocabulary,
+    embed the word→n_tokens table as literals, and replay the
+    per-doc sum in SQL.  ``batch`` retrains with the batched twin instead (the
     r7 scale mode) — same recomputability contract."""
     import duckdb
 
@@ -4089,8 +4069,8 @@ ORACLES["bpe_encode_docs"] = _bpe_encode_oracle
 
 @artifact("documents")
 def _uni_word_table(sf: str) -> dict:
-    """Re-train the unigram vocabulary in pure Python from the same
-    word dict (train_py == the Spark EM rounds — pinned by tests) and
+    """Re-train the unigram vocabulary with train_py from DuckDB's
+    word dict (unigram_train runs the same trainer on Spark's) and
     Viterbi-encode every dict word; shared by the unigram + fertility
     oracles."""
     import duckdb
@@ -6660,9 +6640,9 @@ def tokenizer_stability(spark: SparkSession, sf: str) -> DataFrame:
     releases, and every downstream token count with it.  Per rank:
     both merges, exact-rank agreement, and set membership each way
     (late-rank reorderings are benign; disappearances are not).
-    Distributed training per half (the C67 trainer — loops over the
-    word dict, never the corpus); merges are driver-side by design,
-    the comparison is vocab-rank-sized."""
+    Each half trains like bpe_token_count (one word-dict collect,
+    then the merges on the driver); the comparison is
+    vocab-rank-sized."""
     docs = load(spark, sf, "documents")["documents"]
     ma, mb = _half_merges(docs, sf)
     sa, sb = set(ma), set(mb)

@@ -12,9 +12,10 @@ independent pure-Python references.
 
 import hashlib
 import math
+import time
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -247,16 +248,112 @@ def test_bpe_early_stop_when_nothing_repeats(_spark):
     assert B.bpe_train(df, "doc_id", "text", n_merges=8) == []
 
 
-def test_bpe_merge_fold_is_greedy_left_to_right(_spark):
+def test_bpe_merge_fold_is_greedy_left_to_right():
     """'aaa' under merge (a,a) -> [aa, a, </w>], never [a, aa]."""
     from goka_spark.functions import bpe as B
 
-    df = _spark.createDataFrame([("aaa",)], "word string")
-    out = df.select(
-        B._apply_merge(B._char_syms(F.col("word")), "a", "a")
-        .alias("s")).first()["s"]
-    assert out == ["aa", "a", B.EOW]
-    assert B.merge_word(list("aaa") + [B.EOW], "a", "a") == out
+    assert B.merge_word(list("aaa") + [B.EOW], "a", "a") == \
+        ["aa", "a", B.EOW]
+
+
+@given(wf=st.dictionaries(
+    st.one_of(st.text(alphabet="abc", min_size=1, max_size=7),
+              st.sampled_from(["a", "b", "aaaa", "aaaaa", "abab",
+                               "ababab", "abcabc"])),
+    st.integers(min_value=1, max_value=4), max_size=8),
+    n_merges=st.integers(min_value=0, max_value=14))
+@example(wf={}, n_merges=4)
+@example(wf={"aaaa": 2, "abab": 2, "a": 3}, n_merges=0)
+@example(wf={"aaaa": 2, "abab": 2, "a": 3, "b": 1}, n_merges=8)
+@settings(max_examples=300, deadline=None, derandomize=True)
+def test_train_incremental_equals_train_py(wf, n_merges):
+    """The incremental pair counter == the re-count-every-round
+    reference, merge for merge: overlapping repeats, count ties
+    (a ASC, then b ASC), single-character words, early stop."""
+    from goka_spark.functions import bpe as B
+
+    assert B.train_incremental(wf, n_merges) == B.train_py(wf, n_merges)
+
+
+def _trainer(name):
+    from goka_spark.functions import bpe as B
+    from goka_spark.functions import unigram as U
+
+    return {
+        "bpe_train": lambda df, n: B.bpe_train(
+            df, "doc_id", "text", n_merges=n),
+        "bpe_train_batched": lambda df, n: B.bpe_train_batched(
+            df, "doc_id", "text", n_merges=n, batch=4),
+        "unigram_train": lambda df, n: U.unigram_train(
+            df, "doc_id", "text", n_iters=n),
+    }[name]
+
+
+TRAINERS = ["bpe_train", "bpe_train_batched", "unigram_train"]
+
+
+@pytest.mark.parametrize("name", TRAINERS)
+def test_trainer_refuses_word_dict_over_bound(name, _spark, monkeypatch):
+    """A word dict over MAX_DICT_WORDS raises ValueError after
+    collecting MAX_DICT_WORDS + 1 rows, never the whole dict; a dict
+    at the bound trains."""
+    from goka_spark.functions import bpe as B
+
+    df = _docs(_spark, [[f"w{i}" for i in range(10)] * 2])
+    frame = type(df)  # the classic DataFrame overrides the base class
+    collected, real = [], frame.toArrow
+
+    def spy(self):
+        t = real(self)
+        collected.append(t.num_rows)
+        return t
+
+    def no_collect(self, *a, **k):
+        raise AssertionError("trainer collected rows outside toArrow")
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    monkeypatch.setattr(frame, "collect", no_collect)
+    monkeypatch.setattr(frame, "toPandas", no_collect)
+    monkeypatch.setattr(B, "MAX_DICT_WORDS", 3)
+    with pytest.raises(ValueError, match="more than 3 distinct words"):
+        _trainer(name)(df, 2)
+    assert collected == [4]
+    monkeypatch.setattr(B, "MAX_DICT_WORDS", 10)
+    _trainer(name)(df, 2)
+    assert collected == [4, 10]
+
+
+def _jobs_in_group(sc, group):
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", TRAINERS)
+def test_trainer_jobs_do_not_grow_with_rounds(name, _spark):
+    """Training runs no Spark job per merge round (EM iteration for
+    unigram): 2 and 16 rounds start the same number of jobs."""
+    sc = _spark.sparkContext
+    words = ["lower", "lowest", "newer", "newest", "wider", "widest",
+             "low", "new"]
+    df = _docs(_spark, [words] * 3 + [["slowest", "renewed", "widen"]])
+    try:
+        for n in (2, 16):
+            sc.setJobGroup(f"{name}-{n}", f"{n} rounds")
+            out = _trainer(name)(df, n)
+            if name != "unigram_train":
+                assert len(out) == n  # no early stop: n real rounds
+        # status events arrive in order: once this job shows, any job
+        # the trainers ran would show too
+        sc.setJobGroup(f"{name}-sentinel", "sentinel")
+        _spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while _jobs_in_group(sc, f"{name}-sentinel") == 0 \
+            and time.time() < deadline:
+        time.sleep(0.05)
+    n2 = _jobs_in_group(sc, f"{name}-2")
+    assert n2 >= 1
+    assert _jobs_in_group(sc, f"{name}-16") == n2
 
 
 @given(corpus=st.lists(

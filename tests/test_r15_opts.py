@@ -172,38 +172,20 @@ def test_cosine_sweep_rejects_base_mined_too_high(spark):
                              base=base, base_threshold=0.5)
 
 
-def test_bpe_train_grouped_matches_independent_loops(spark, sf_dir):
-    """The grouped trainer (one pair-count job per round for all
-    groups) returns exactly the merges of one bpe_train loop per
-    frame — full corpus + both C175 md5-slot halves, the real
-    _bpe_grouped composition."""
+def test_half_merges_match_train_py_on_duckdb_halves(spark, sf_dir):
+    """The C175 half-corpus merge tables equal train_py on each half's
+    word dict, computed by DuckDB under the same md5 slot split."""
+    import duckdb
+
     from goka_spark.functions import bpe as B
     docs = load(spark, sf_dir, "documents")["documents"]
-    slot = llmdata._half_slot()
-    frames = [docs, docs.filter(slot < 50), docs.filter(slot >= 50)]
-    grouped = B.bpe_train_grouped(frames, "doc_id", "text", n_merges=16)
-    for g, df in zip(grouped, frames):
-        assert g == B.bpe_train(df, "doc_id", "text", n_merges=16)
-
-
-def test_bpe_train_grouped_early_stop_is_per_group(spark):
-    """A group whose pairs stop repeating converges alone (classic
-    early-stop) while the other keeps training to n_merges."""
-    from goka_spark.functions import bpe as B
-    converges = spark.createDataFrame(
-        [(1, "ab cd ef")], "doc_id long, text string")
-    rich = spark.createDataFrame(
-        [(1, "aaa aaa aaab aaab bbba bbba")],
-        "doc_id long, text string")
-    grouped = B.bpe_train_grouped([converges, rich],
-                                  "doc_id", "text", n_merges=6)
-    assert grouped[0] == B.bpe_train(converges, "doc_id", "text",
-                                     n_merges=6)
-    assert grouped[1] == B.bpe_train(rich, "doc_id", "text", n_merges=6)
-    assert len(grouped[0]) < len(grouped[1])
-
-
-def test_bpe_train_grouped_no_frames():
-    """No frames, no merge tables — not an IndexError."""
-    from goka_spark.functions import bpe as B
-    assert B.bpe_train_grouped([], "doc_id", "text") == []
+    want = []
+    for cond in ("< 50", ">= 50"):
+        wf = dict(duckdb.sql(
+            f"SELECT w, COUNT(*) FROM (SELECT UNNEST({llmdata._WORDS}) AS w "
+            f"FROM '{sf_dir}/documents.parquet' WHERE "
+            f"CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))"
+            f" AS BIGINT) % 100 {cond}) GROUP BY w").fetchall())
+        want.append(B.train_py(wf, 16))
+    assert all(want)
+    assert llmdata._half_merges(docs, sf_dir) == tuple(want)

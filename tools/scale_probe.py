@@ -400,7 +400,7 @@ def main():
             label=F.length("text") >= 300,
             train_pred=F.col("doc") % 3 == 0))
 
-        # distributed BPE (r6): training rounds run on the word DICT
+        # BPE: training runs on the collected word DICT
         # (vocabulary-sized — the salting grows it ×f here, real
         # corpora grow it ~log), so train time tracks the dict; the
         # corpus-side count is one broadcast join — expect ~linear
