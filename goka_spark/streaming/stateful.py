@@ -52,14 +52,15 @@ def stateful_fold(
     order_cols = order_by or []
     state_fields = [f.strip().split()[0] for f in state_schema.split(",")]
 
-    def emit(st) -> pd.DataFrame:
+    def emit(key, st) -> pd.DataFrame:
         out = finish(st) if finish else st
-        rec = {key_col: None}
+        cols = {key_col: None}
         if isinstance(out, dict):
-            rec.update({k: out.get(k) for k in state_fields})
+            cols.update({k: [out.get(k)] for k in state_fields})
         else:
-            rec[state_fields[0]] = out
-        return pd.DataFrame([rec])
+            cols[state_fields[0]] = [out]
+        cols[key_col] = [key]
+        return pd.DataFrame(cols)
 
     def process(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
@@ -68,8 +69,7 @@ def stateful_fold(
             # observable before the key leaves the table).
             if state.exists:
                 (blob,) = state.get
-                final = emit(json.loads(blob))
-                final[key_col] = key[0]
+                final = emit(key[0], json.loads(blob))
                 state.remove()
                 yield final
             else:
@@ -81,16 +81,15 @@ def stateful_fold(
         else:
             st = init() if callable(init) else init
         for pdf in pdfs:
-            if order_cols:
+            if order_cols and len(pdf) > 1:
                 pdf = pdf.sort_values(order_cols, kind="stable")
-            for row in pdf.to_dict("records"):
-                st = func(st, row)
+            names = list(pdf.columns)
+            for vals in zip(*(pdf[c].tolist() for c in names)):
+                st = func(st, dict(zip(names, vals)))
         state.update((json.dumps(st),))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        cur = emit(st)
-        cur[key_col] = key[0]
-        yield cur
+        yield emit(key[0], st)
 
     timeout = (GroupStateTimeout.ProcessingTimeTimeout
                if ttl_ms is not None else GroupStateTimeout.NoTimeout)

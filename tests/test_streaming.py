@@ -269,34 +269,6 @@ def test_visit_all_live_keys(spark, tmp_path):
         q.stop()
 
 
-def test_tws_fold_parity_when_available(spark, tmp_path):
-    """transformWithState fold (timers + multi-state): full parity
-    run where protobuf exists; here the env gate must refuse loudly."""
-    import pytest
-
-    from goka_spark.streaming.tws import HAVE_TWS, stateful_fold_tws
-
-    src = str(tmp_path / "topic")
-    _write_batch(spark, src, _rows(0, 3, "a"))
-    stream = stream_from_dir(spark, src, SCHEMA)
-    cb = lambda s, r: (s or 0.0) + r["value"]  # noqa: E731
-    if not HAVE_TWS:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            stateful_fold_tws(stream, "key", cb, "total double")
-        return
-    folded = stateful_fold_tws(stream, "key", cb, "total double",
-                               order_by=["ts"])
-    q = (folded.writeStream.queryName("tws_out").outputMode("update")
-         .format("memory")
-         .option("checkpointLocation", str(tmp_path / "ckpt_tws")).start())
-    try:
-        q.processAllAvailable()
-        got = {r.key: r.total for r in spark.sql("select * from tws_out").collect()}
-        assert got == {"a": 3.0}
-    finally:
-        q.stop()
-
-
 def test_stream_stream_interval_join(spark, tmp_path):
     """Stream-stream windowed join — BEYOND goka's surface (ctx.Join
     only reaches a co-partitioned TABLE; reference context.go:305):
