@@ -61,15 +61,15 @@ g = define_group("clicks-fold", input_stream("clicks"),
 Processor(g).run({"clicks": topic}).table.orderBy("key").show()
 
 # -- retention recovery + compression (r10 additions) -----------------
-# A gzip-compressing producer (sarama config.Producer.Compression)
+# A zstd-compressing producer (sarama config.Producer.Compression)
 # interoperates over the same socket...
 from goka_spark.kafka_wire import (OFFSET_NEWEST, OFFSET_OLDEST,
                                    WireProducer as _WP,
                                    find_offset_to_load)
 
-gz = _WP([broker.address], compression="gzip")
-gz.emit("clicks", "user-0", b'{"value": 99.0}', partition=0)
-print("gzip emit ok; hwm now",
+zs = _WP([broker.address], compression="zstd")
+zs.emit("clicks", "user-0", b'{"value": 99.0}', partition=0)
+print("zstd emit ok; hwm now",
       tm.get_offset("clicks", 0, OFFSET_NEWEST))
 
 # ...and when retention outruns a stored offset, the reference's
@@ -80,7 +80,7 @@ start, hwm = find_offset_to_load(tm, "clicks", 0, stored_offset=0)
 print(f"stored=0 but oldest={tm.get_offset('clicks', 0, OFFSET_OLDEST)}"
       f" -> resume at {start} (hwm {hwm})")
 assert start == 3
-gz.close()
+zs.close()
 
 for c in (cons, prod, tm):
     c.close()

@@ -24,13 +24,12 @@ via the ApiVersions handshake (modern-first with KIP-511 downgrade):
   OFFSET_NEWEST (high watermark) / timestamp lookup — sarama
   client.GetOffset, what goka's topic_manager.go:131 GetOffset and
   partition_table.go:243 findOffsetToLoad resume clamp call
-- RecordBatch compression: gzip (stdlib), snappy (xerial framing +
-  block format, pure-Python goka_spark/snappy_codec.py) and lz4
-  (standard frame + block format with XXH32 checksums, pure-Python
-  goka_spark/lz4_codec.py) encode+decode via the attributes codec
-  bits; zstd DECODES in full via the pure-Python RFC 8878 decoder
-  (goka_spark/zstd_codec.py — fetches from real zstd-producing
-  brokers work) and PRODUCES spec-valid store-mode frames
+- RecordBatch compression, all five codecs both ways via the
+  attributes codec bits: gzip on the stdlib; zstd, lz4 and snappy on
+  the C++ codecs pyarrow ships (libzstd, liblz4, google snappy).  Two
+  pieces of Kafka's own framing stay here: snappy-java's xerial
+  stream around snappy blocks, and the lz4 frame with independent
+  64 KiB blocks that Kafka's Java reader requires
 - Consumer-group membership at fixed sarama-era versions:
   FindCoordinator v0 / JoinGroup v0 / SyncGroup v0 / Heartbeat v0 /
   LeaveGroup v0 / OffsetCommit v2 (generation-fenced) /
@@ -64,12 +63,11 @@ import socket
 import struct
 import threading
 import time
+import zlib
 from dataclasses import dataclass, field
 from typing import Optional
 
-from goka_spark import lz4_codec as _lz4
-from goka_spark import snappy_codec as _snappy
-from goka_spark import zstd_codec as _zstd
+import pyarrow as pa
 
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) — required by
@@ -321,14 +319,9 @@ class Record:
 
 # RecordBatch v2 compression codecs (attributes bits 0-2).  gzip
 # comes from the stdlib (Kafka's gzip codec IS a standard gzip
-# stream — java.util.zip.GZIPOutputStream); snappy (xerial framing +
-# block format, goka_spark/snappy_codec.py) and lz4 (standard LZ4
-# frame + block format with XXH32, goka_spark/lz4_codec.py — the
-# broken-header-checksum variant existed only in the legacy v0/v1
-# message wrappers this client never emits) are implemented from the
-# public specs; zstd decode is the full pure-Python RFC 8878
-# decoder (goka_spark/zstd_codec.py), zstd encode emits spec-valid
-# store-mode frames (raw blocks — see zstd_codec.compress).
+# stream — java.util.zip.GZIPOutputStream); zstd, lz4 and snappy come
+# from pyarrow's C++ codecs.  zstd is a plain RFC 8878 frame; lz4 and
+# snappy keep Kafka's framing, written below (_compress/_decompress).
 CODEC_NONE, CODEC_GZIP, CODEC_SNAPPY, CODEC_LZ4, CODEC_ZSTD = 0, 1, 2, 3, 4
 _CODEC_NAMES = {CODEC_NONE: "none", CODEC_GZIP: "gzip",
                 CODEC_SNAPPY: "snappy", CODEC_LZ4: "lz4",
@@ -350,16 +343,98 @@ class UnsupportedCodecError(ValueError):
             f"none/gzip/snappy/lz4/zstd")
 
 
+# lz4: the frame header Kafka's own writer emits — magic, FLG 0x60
+# (version 01, independent blocks, no checksums), BD 0x40 (64 KiB
+# blocks), HC = (xxh32(FLG BD) >> 8) & 0xFF.  pyarrow's frame encoder
+# links the blocks of inputs over 64 KiB, which Kafka's
+# KafkaLZ4BlockInputStream refuses, so frames are built here from raw
+# lz4 blocks.
+_LZ4_HEADER = b"\x04\x22\x4d\x18\x60\x40\x82"
+_LZ4_BLOCK = 1 << 16
+# snappy: snappy-java's xerial stream — magic, version 1, compat 1,
+# then 32 KiB blocks each prefixed with its big-endian length.
+_XERIAL_MAGIC = b"\x82SNAPPY\x00"
+_XERIAL_HEADER = _XERIAL_MAGIC + struct.pack(">ii", 1, 1)
+_SNAPPY_BLOCK = 32 * 1024
+# snappy's densest element is a 3-byte copy of 64 bytes, so no valid
+# block decodes to more than 22x its own length.
+_SNAPPY_MAX_RATIO = 22
+
+
+def _compress(codec: int, raw: bytes) -> bytes:
+    """The records section as codec ``codec`` puts it on the wire."""
+    if codec == CODEC_GZIP:
+        return _gzip.compress(raw)
+    if codec == CODEC_ZSTD:
+        return pa.compress(raw, codec="zstd", asbytes=True)
+    if codec == CODEC_LZ4:
+        out = bytearray(_LZ4_HEADER)
+        for i in range(0, len(raw), _LZ4_BLOCK):
+            chunk = raw[i:i + _LZ4_BLOCK]
+            blk = pa.compress(chunk, codec="lz4_raw", asbytes=True)
+            if len(blk) < len(chunk):
+                out += struct.pack("<I", len(blk)) + blk
+            else:                   # would grow: store, size high bit set
+                out += struct.pack("<I", len(chunk) | 1 << 31) + chunk
+        return bytes(out + b"\0\0\0\0")         # EndMark
+    if codec == CODEC_SNAPPY:
+        out = bytearray(_XERIAL_HEADER)
+        for i in range(0, len(raw), _SNAPPY_BLOCK):
+            blk = pa.compress(raw[i:i + _SNAPPY_BLOCK], codec="snappy",
+                              asbytes=True)
+            out += struct.pack(">I", len(blk)) + blk
+        return bytes(out)
+    return raw
+
+
+def _unsnappy_block(block: bytes) -> bytes:
+    n = _Reader(block).uvarint()            # the block's length preamble
+    if n > _SNAPPY_MAX_RATIO * len(block):
+        raise ValueError(f"block of {len(block)} bytes declares {n}")
+    return pa.decompress(block, decompressed_size=n, codec="snappy",
+                         asbytes=True)
+
+
+def _unsnappy(section: bytes) -> bytes:
+    """An xerial stream, or one raw snappy block when the magic is
+    absent (producers from before the framing)."""
+    if section[:8] != _XERIAL_MAGIC:
+        return _unsnappy_block(section)
+    rd = _Reader(section)
+    rd.raw(len(_XERIAL_HEADER))
+    out = []
+    while rd.remaining():
+        out.append(_unsnappy_block(rd.raw(rd.uint32())))
+    return b"".join(out)
+
+
+def _decompress(codec: int, section: bytes) -> bytes:
+    """Inverse of _compress.  Corrupt or truncated input raises
+    ValueError naming the codec, never an IndexError or OSError."""
+    name = _CODEC_NAMES[codec]
+    try:
+        if codec == CODEC_GZIP:
+            return _gzip.decompress(section)
+        if codec in (CODEC_ZSTD, CODEC_LZ4):
+            if not section:
+                raise ValueError("no frame")
+            return pa.CompressedInputStream(pa.BufferReader(section),
+                                            name).read()
+        if codec == CODEC_SNAPPY:
+            return _unsnappy(section)
+    except (OSError, EOFError, ValueError, zlib.error) as e:
+        raise ValueError(f"{name} records section: {e}") from None
+    return section
+
+
 def encode_record_batch(base_offset: int, records: list[Record],
                         codec: int = CODEC_NONE) -> bytes:
     """One RecordBatch v2: offsets/timestamps become deltas against
     the first record; CRC32C covers attributes..records.  With
     ``codec=CODEC_GZIP`` the records section is compressed per the
     batch format (the header fields through recordCount stay
-    uncompressed; CRC covers the final, compressed bytes).  zstd
-    emits STORE-MODE frames (spec-valid raw-block RFC 8878 frames any
-    decoder accepts — see zstd_codec.compress for why a pure-Python
-    encoder stops there)."""
+    uncompressed; CRC covers the final, compressed bytes).  The other
+    codecs follow the same layout (see _compress)."""
     if codec not in _CODEC_NAMES:
         raise UnsupportedCodecError(codec)
     base_ts = records[0].timestamp
@@ -398,16 +473,7 @@ def encode_record_batch(base_offset: int, records: list[Record],
         payload = rec.getvalue()
         recs.varint(len(payload))
         recs.raw(payload)
-    recs_b = recs.getvalue()
-    if codec == CODEC_GZIP:
-        recs_b = _gzip.compress(recs_b)
-    elif codec == CODEC_SNAPPY:
-        recs_b = _snappy.compress(recs_b)
-    elif codec == CODEC_LZ4:
-        recs_b = _lz4.compress(recs_b)
-    elif codec == CODEC_ZSTD:
-        recs_b = _zstd.compress(recs_b)
-    body.raw(recs_b)
+    body.raw(_compress(codec, recs.getvalue()))
     body_b = body.getvalue()
     out = _Writer()
     out.int64(base_offset)
@@ -447,19 +513,10 @@ def decode_record_batches(data: bytes) -> list[Record]:
         br.int32()                                   # baseSequence
         n = br.int32()
         codec = attributes & 0x07
-        if codec == CODEC_GZIP:
-            br = _Reader(_gzip.decompress(br.raw(br.remaining())))
-        elif codec == CODEC_SNAPPY:
-            br = _Reader(_snappy.decompress(br.raw(br.remaining())))
-        elif codec == CODEC_LZ4:
-            br = _Reader(_lz4.decompress(br.raw(br.remaining())))
-        elif codec == CODEC_ZSTD:
-            # full RFC 8878 pure-Python decoder: a fetch from a
-            # zstd-producing broker decodes; produce emits spec-valid
-            # store-mode frames (see encode_record_batch / _zstd.compress)
-            br = _Reader(_zstd.decompress(br.raw(br.remaining())))
-        elif codec:
+        if codec not in _CODEC_NAMES:
             raise UnsupportedCodecError(codec)
+        if codec:
+            br = _Reader(_decompress(codec, br.raw(br.remaining())))
         for _ in range(n):
             ln = br.varint()
             rr = _Reader(br.raw(ln))
@@ -988,9 +1045,7 @@ class WireProducer:
                  backoff: Optional[SimpleBackoff] = None,
                  compression: str = "none") -> None:
         #: sarama config.Producer.Compression — "none", "gzip",
-        #: "snappy", "lz4" (pure-Python codecs) or "zstd"
-        #: (STORE-MODE frames: wire-valid RFC 8878, no ratio — see
-        #: zstd_codec.compress).  An unknown codec fails HERE, at
+        #: "snappy", "lz4" or "zstd".  An unknown codec fails HERE, at
         #: configuration time and before any connection is opened,
         #: not at the first emit(): a producer that cannot send
         #: should never look healthy.

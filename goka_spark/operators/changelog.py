@@ -188,104 +188,3 @@ class ChangelogTable:
         table.write.mode("overwrite").parquet(f"{self.path}/_epoch={epoch}")
         self._delete_epochs(keep=epoch)
         table.unpersist()
-
-
-try:  # delta-spark is optional; everything above runs without it
-    from delta.tables import DeltaTable  # noqa: F401
-    HAVE_DELTA = True
-except ImportError:
-    HAVE_DELTA = False
-
-
-class DeltaChangelogTable:
-    """``ChangelogTable`` on Delta Lake, where ``delta-spark`` is
-    installed: the production-hardened version of the advisory
-    epoch-claim protocol above (VERDICT r3 item 7).
-
-    Mapping of goka's table-topic contract (graph.go:44-46,
-    partition_table.go recovery) onto Delta's native mechanics:
-
-    - last-write-wins upsert      → ``MERGE INTO`` (one ACID commit)
-    - tombstone                   → a real ``WHEN MATCHED DELETE``
-      (no marker rows to retain: the commit log makes "write snapshot
-      then delete old epochs" atomic, so resurrection is impossible
-      by construction)
-    - recover-to-offset           → time travel ``versionAsOf``
-    - log compaction              → ``OPTIMIZE`` / checkpointing,
-      Delta's own background story
-
-    Same method surface as ``ChangelogTable`` so callers swap by
-    constructor.  Object-store-safe for CONCURRENT writers — Delta's
-    commit protocol (optimistic concurrency on the _delta_log) is the
-    hardened version of the ``.claim`` files above.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, key_col: str = "key"):
-        if not HAVE_DELTA:
-            raise RuntimeError(
-                "delta-spark is not installed in this environment — "
-                "use ChangelogTable (Hadoop-FS epoching) instead")
-        self.spark = spark
-        self.path = path
-        self.key_col = key_col
-
-    def _table(self) -> "DeltaTable":
-        return DeltaTable.forPath(self.spark, self.path)
-
-    def _version(self) -> int:
-        return self._table().history(1).select("version").head()[0]
-
-    def merge(self, updates: DataFrame, tombstone: Optional[str] = None) -> int:
-        """MERGE INTO current USING updates ON key — one atomic Delta
-        commit; returns its version (the time-travel handle)."""
-        upd = updates.withColumn(
-            "_tombstone",
-            F.col(tombstone) if tombstone else F.lit(False))
-        if tombstone:
-            upd = upd.drop(tombstone)
-        # A changelog batch normally carries SEVERAL rows per key;
-        # Delta MERGE throws "multiple source rows matched" on that
-        # shape, so reduce to one row per key first.  The pick among a
-        # key's batch rows is arbitrary — the same contract as the
-        # parquet variant, whose equal-rank max_by also breaks ties
-        # arbitrarily; order the batch upstream (e.g. keep only the
-        # max-offset row) when last-within-batch must be deterministic.
-        upd = upd.dropDuplicates([self.key_col])
-        cols = [c for c in upd.columns if c != "_tombstone"]
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            upd.filter(~F.col("_tombstone")).drop("_tombstone") \
-                .write.format("delta").save(self.path)
-            return self._version()
-        sets = {c: f"u.{c}" for c in cols if c != self.key_col}
-        (self._table().alias("t")
-         .merge(upd.alias("u"), f"t.{self.key_col} = u.{self.key_col}")
-         .whenMatchedDelete(condition="u._tombstone")
-         .whenMatchedUpdate(condition="NOT u._tombstone", set=sets)
-         .whenNotMatchedInsert(
-             condition="NOT u._tombstone",
-             values={c: f"u.{c}" for c in cols})
-         .execute())
-        return self._version()
-
-    # a log append IS an upsert when the table holds current state
-    append_delta = merge
-
-    def read_compacted(self, as_of: Optional[int] = None) -> DataFrame:
-        """Current state; ``as_of`` is Delta time travel (recover to
-        commit N) — horizon bounded by VACUUM retention, exactly the
-        epoch-retention bound of the parquet variant."""
-        r = self.spark.read.format("delta")
-        if as_of is not None:
-            r = r.option("versionAsOf", as_of)
-        return r.load(self.path)
-
-    def compact(self) -> None:
-        """Delta's file compaction (bin-packing OPTIMIZE); state is
-        unchanged, small files merge."""
-        self.spark.sql(f"OPTIMIZE delta.`{self.path}`")
-
-    def vacuum(self, retention_hours: float = 168.0) -> None:
-        """Expire old file versions (the delete-retention analog of
-        ``purge_tombstones``): time travel beyond the horizon is gone
-        after this, like compacted epochs."""
-        self._table().vacuum(retention_hours)

@@ -154,50 +154,3 @@ def test_partitioned_topic_write_prunes_scan(spark, tmp_path):
     assert back.count() == 10
     # and the partition column itself is reconstructed from the path
     assert {r.event_type for r in back.select("event_type").collect()} == {"buy"}
-
-
-def test_delta_changelog_gated_loudly(spark, tmp_path):
-    """Without delta-spark the Delta variant refuses construction with
-    a pointer to the parquet fallback — never a silent downgrade."""
-    import pytest
-
-    from goka_spark.operators.changelog import HAVE_DELTA, DeltaChangelogTable
-
-    if HAVE_DELTA:
-        pytest.skip("delta-spark present; gated path not applicable")
-    with pytest.raises(RuntimeError, match="ChangelogTable"):
-        DeltaChangelogTable(spark, str(tmp_path / "d"))
-
-
-def test_delta_changelog_merge_and_time_travel(spark, tmp_path):
-    """Where delta-spark exists: same semantics as the parquet
-    ChangelogTable tests above — upsert/delete/insert in one commit,
-    versionAsOf as recover-to-offset.  (Skips in containers without
-    the lib; the contract is the point.)"""
-    import pytest
-
-    pytest.importorskip("delta")
-    from goka_spark.operators.changelog import DeltaChangelogTable
-
-    cl = DeltaChangelogTable(spark, str(tmp_path / "dlog"))
-    v0 = cl.append_delta(spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3)], "key string, cnt long"))
-    v1 = cl.merge(spark.createDataFrame(
-        [("a", 10, False), ("b", 0, True), ("d", 4, False)],
-        "key string, cnt long, dead boolean"), tombstone="dead")
-    assert v1 > v0
-    got = {r.key: r.cnt for r in cl.read_compacted().collect()}
-    assert got == {"a": 10, "c": 3, "d": 4}
-    past = {r.key: r.cnt for r in cl.read_compacted(as_of=v0).collect()}
-    assert past == {"a": 1, "b": 2, "c": 3}
-    # the normal changelog shape: several rows per key in ONE batch —
-    # Delta MERGE would throw "multiple source rows matched" without
-    # the per-key reduction; one arbitrary batch row must win (the
-    # parquet variant's equal-rank max_by contract)
-    v2 = cl.merge(spark.createDataFrame(
-        [("a", 100), ("a", 101), ("e", 5), ("e", 6)],
-        "key string, cnt long"))
-    assert v2 > v1
-    got2 = {r.key: r.cnt for r in cl.read_compacted().collect()}
-    assert got2["a"] in (100, 101) and got2["e"] in (5, 6)
-    assert got2["c"] == 3 and got2["d"] == 4

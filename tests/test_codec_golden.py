@@ -1,110 +1,101 @@
-"""Golden cross-checks of the pure-Python snappy/lz4 codecs against a
-REAL independent implementation (the codecs bundled inside pyarrow's
-Arrow C++ build: google snappy, lz4, lz4frame) plus hand-assembled
+"""Golden cross-checks of kafka_wire's snappy/lz4 framing against an
+independent implementation (the codecs bundled inside pyarrow's Arrow
+C++ build: google snappy, lz4, lz4frame) plus hand-assembled
 spec-derived byte vectors.
 
-r11 ADVICE: the round-trip suites were self-referential — a symmetric
-encode+decode bug would pass CI yet fail against a real broker peer.
-These tests close that: pyarrow's codecs decode OUR output and we
-decode THEIRS, in both block and frame form, plus fixed golden bytes
-assembled directly from the public format descriptions.
+The blocks inside our frames come from pyarrow too, so what these
+tests pin is the framing: pyarrow's codecs decode the blocks and
+frames OUR dispatch writes, and the dispatch decodes blocks and
+frames that pyarrow or the public format descriptions produce.
 """
 
 import pytest
 
 import pyarrow as pa
 
-from goka_spark import lz4_codec, snappy_codec
-
-CORPUS = [
-    b"",
-    b"a",
-    b"hello world",
-    b"hello hello hello hello world world world " * 40,
-    bytes(range(256)) * 300,          # poorly compressible
-    b"\x00" * 100_000,                # long runs / overlapping matches
-    b"abcdefgh" * 20_000,             # period-8 matches crossing blocks
-    ("the quick brown fox jumps over the lazy dog. " * 3000).encode(),
-]
-
-
-def _ids(xs):
-    return [f"len{len(x)}" for x in xs]
-
+from goka_spark.kafka_wire import (CODEC_LZ4, CODEC_SNAPPY, _compress,
+                                   _decompress)
+from tests.test_wire_codecs import (CORPUS, ids, lz4_blocks, lz4_frame,
+                                    xerial, xerial_blocks)
 
 # ---------------------------------------------------------------- snappy
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_snappy_block_decodes_reference_output(data):
+    """A raw (unframed) reference block takes the pre-xerial path."""
     ref = pa.Codec("snappy").compress(data, asbytes=True)
-    assert snappy_codec._decompress_block(ref) == data
+    assert _decompress(CODEC_SNAPPY, ref) == data
 
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_reference_decodes_our_snappy_block(data):
-    ours = snappy_codec._compress_block(data)
-    got = pa.Codec("snappy").decompress(
-        ours, decompressed_size=len(data), asbytes=True)
+    blocks = xerial_blocks(_compress(CODEC_SNAPPY, data))
+    got = b"".join(pa.Codec("snappy").decompress(
+        blk, decompressed_size=min(32768, len(data) - 32768 * i),
+        asbytes=True) for i, blk in enumerate(blocks))
     assert got == data
 
 
 def test_snappy_golden_bytes():
     """Hand-assembled from format_description.txt: varint length 11,
-    literal tag (n-1)<<2 for 'hello hello' would be 11 literals —
-    instead use a copy: 6 literals 'hello ' then copy(off=6, len=5).
-    Tag byte for 2-byte-offset copy of length 5: ((5-1)<<2)|2 = 0x12."""
+    6 literals 'hello ' then copy(off=6, len=5).  Tag byte for a
+    2-byte-offset copy of length 5: ((5-1)<<2)|2 = 0x12."""
     golden = bytes([11]) + bytes([(6 - 1) << 2]) + b"hello " \
         + bytes([((5 - 1) << 2) | 2]) + (6).to_bytes(2, "little")
-    assert snappy_codec._decompress_block(golden) == b"hello hello"
+    assert _decompress(CODEC_SNAPPY, golden) == b"hello hello"
     # 1-byte-offset copy form: tag ((len-4)<<2)|1 with off split
     # 3 high bits into tag bits 5-7: off=6 -> high=0, low=6
     golden1 = bytes([11]) + bytes([(6 - 1) << 2]) + b"hello " \
         + bytes([((5 - 4) << 2) | 1, 6])
-    assert snappy_codec._decompress_block(golden1) == b"hello hello"
+    assert _decompress(CODEC_SNAPPY, golden1) == b"hello hello"
+    assert _decompress(CODEC_SNAPPY, xerial(golden, golden1)) \
+        == b"hello hello" * 2
 
 
 def test_snappy_xerial_frame_of_reference_blocks():
-    """An xerial stream whose blocks were compressed by GOOGLE snappy
-    (not ours) must decode — the framing and block layers must not
-    assume our own encoder's choices."""
+    """An xerial stream whose blocks were compressed by google snappy
+    in odd sizes (not our 32 KiB chunking) decodes: the framing layer
+    assumes nothing about the encoder's choices."""
     data = b"xerial framing with reference blocks " * 2000
-    blocks = [data[i:i + 32768] for i in range(0, len(data), 32768)]
-    out = bytearray(snappy_codec._XERIAL_HEADER)
-    for b in blocks:
-        ref = pa.Codec("snappy").compress(b, asbytes=True)
-        out += len(ref).to_bytes(4, "big") + ref
-    assert snappy_codec.decompress(bytes(out)) == data
+    blocks = [data[i:i + 20000] for i in range(0, len(data), 20000)]
+    stream = xerial(*(pa.Codec("snappy").compress(b, asbytes=True)
+                      for b in blocks))
+    assert _decompress(CODEC_SNAPPY, stream) == data
 
 
 # ------------------------------------------------------------------ lz4
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_lz4_block_decodes_reference_output(data):
+    """Reference raw blocks in an independent-block frame."""
     if not data:
         return  # lz4 raw blocks can't represent empty input
-    ref = pa.Codec("lz4_raw").compress(data, asbytes=True)
-    assert lz4_codec._decompress_block(ref) == data
+    blocks = [pa.Codec("lz4_raw").compress(data[i:i + 65536], asbytes=True)
+              for i in range(0, len(data), 65536)]
+    assert _decompress(CODEC_LZ4, lz4_frame(*blocks)) == data
 
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_reference_decodes_our_lz4_block(data):
-    if not data:
-        return
-    ours = lz4_codec._compress_block(data)
-    got = pa.Codec("lz4_raw").decompress(
-        ours, decompressed_size=len(data), asbytes=True)
+    got = b""
+    for blk, stored in lz4_blocks(_compress(CODEC_LZ4, data)):
+        got += blk if stored else pa.Codec("lz4_raw").decompress(
+            blk, decompressed_size=min(65536, len(data) - len(got)),
+            asbytes=True)
     assert got == data
 
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_lz4_frame_decodes_reference_output(data):
+    """pyarrow's frames link their blocks above 64 KiB."""
     ref = pa.Codec("lz4").compress(data, asbytes=True)
-    assert lz4_codec.decompress(ref) == data
+    assert _decompress(CODEC_LZ4, ref) == data
 
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_reference_decodes_our_lz4_frame(data):
-    ours = lz4_codec.compress(data)
+    ours = _compress(CODEC_LZ4, data)
     got = pa.Codec("lz4").decompress(
         ours, decompressed_size=len(data), asbytes=True)
     assert got == data
@@ -112,38 +103,36 @@ def test_reference_decodes_our_lz4_frame(data):
 
 def test_lz4_golden_block_bytes():
     """Spec-assembled block: token 0x64 = 6 literals + match len 4+4=8,
-    offset 6 -> 'hello hello he' (6 lit + 8 match), then final
-    literals-only sequence '!' (token 0x10)."""
+    offset 6 -> 'hello hello he' (6 lit + 8 match), then the final
+    literals-only sequence '!!!!!' (token 0x50) — the block format
+    ends every block with at least 5 literals."""
     golden = bytes([0x64]) + b"hello " + (6).to_bytes(2, "little") \
-        + bytes([0x10]) + b"!"
-    assert lz4_codec._decompress_block(golden) == b"hello hello he!"
+        + bytes([0x50]) + b"!!!!!"
+    assert _decompress(CODEC_LZ4, lz4_frame(golden)) \
+        == b"hello hello he!!!!!"
 
 
 def test_lz4_linked_frame():
     """Block-LINKED frame (FLG B.Indep=0, the lz4frame default for
     multi-block input): block 2's match offsets reach back into block
-    1's output — r11 ADVICE item.  Hand-assembled: block 1 = 16
-    literals, block 2 = one copy of those 16 bytes from history."""
+    1's output.  Hand-assembled: block 1 = 16 literals, block 2 = one
+    copy of those 16 bytes from history, then 5 final literals.
+    FLG 0x44 (v01, linked, content checksum), BD 0x40, HC 0x5e; the
+    trailing word is XXH32 of the content."""
     part1 = b"0123456789abcdef"
     blk1 = bytes([0xF0, 1]) + part1          # 16 literals (15+1)
     # 0 literals, matchlen 16 -> token 0x0C (16-4=12), offset 16
-    blk2 = bytes([0x0C]) + (16).to_bytes(2, "little")
-    flg = 0b01000100                          # v01, LINKED, C.Checksum
-    bd = 0b01000000
-    header = bytes([flg, bd])
-    frame = bytearray(lz4_codec.LZ4_MAGIC.to_bytes(4, "little"))
-    frame += header
-    frame.append((lz4_codec.xxh32(header) >> 8) & 0xFF)
-    for blk in (blk1, blk2):
-        frame += len(blk).to_bytes(4, "little") + blk
-    frame += (0).to_bytes(4, "little")
-    frame += lz4_codec.xxh32(part1 + part1).to_bytes(4, "little")
-    assert lz4_codec.decompress(bytes(frame)) == part1 + part1
+    blk2 = bytes([0x0C]) + (16).to_bytes(2, "little") \
+        + bytes([0x50]) + b"!!!!!"
+    frame = lz4_frame(blk1, blk2, header=b"\x04\x22\x4d\x18\x44\x40\x5e")
+    frame += (0xE68591A6).to_bytes(4, "little")
+    assert _decompress(CODEC_LZ4, frame) == part1 + part1 + b"!!!!!"
 
 
 def test_lz4_linked_frame_window_slides():
-    """Linked history is the trailing 64 KiB only; a 3-block linked
-    frame where block 3 references bytes produced by block 2."""
+    """Linked history spans blocks; a 3-block linked frame where block
+    3 references bytes produced by blocks 1 and 2.  FLG 0x40 (v01,
+    linked, no checksums), BD 0x40, HC 0xc0."""
     b1 = b"A" * 10
     b2 = b"B" * 10
     blk1 = bytes([0xA0]) + b1
@@ -151,38 +140,19 @@ def test_lz4_linked_frame_window_slides():
     # block 3: one copy, offset 20 (back to start of b1), match len
     # 4+15+1=20 -> produces b1+b2 again.  Sequence layout per spec:
     # token, [lit ext], literals, offset, [match ext].
-    blk3 = bytes([0x0F]) + (20).to_bytes(2, "little") + bytes([1])
-    flg = 0b01000000                          # v01, LINKED, no checksums
-    bd = 0b01000000
-    header = bytes([flg, bd])
-    frame = bytearray(lz4_codec.LZ4_MAGIC.to_bytes(4, "little"))
-    frame += header
-    frame.append((lz4_codec.xxh32(header) >> 8) & 0xFF)
-    for blk in (blk1, blk2, blk3):
-        frame += len(blk).to_bytes(4, "little") + blk
-    frame += (0).to_bytes(4, "little")
-    assert lz4_codec.decompress(bytes(frame)) == b1 + b2 + b1 + b2
-
-
-def test_lz4_bd_code_follows_block_size():
-    """r11 ADVICE: block_size > 64 KiB must not ship under BD code 4
-    (strict decoders reject blocks above the declared max)."""
-    data = bytes(range(256)) * 1500           # ~384 KiB, 2 blocks @256K
-    frame = lz4_codec.compress(data, block_size=256 * 1024)
-    assert frame[5] >> 4 == 5                 # BD code 5 = 256 KiB
-    assert lz4_codec.decompress(frame) == data
-    assert pa.Codec("lz4").decompress(
-        frame, decompressed_size=len(data), asbytes=True) == data
-    with pytest.raises(ValueError):
-        lz4_codec.compress(b"x", block_size=8 * 1024 * 1024)
+    blk3 = bytes([0x0F]) + (20).to_bytes(2, "little") + bytes([1]) \
+        + bytes([0x50]) + b"!!!!!"
+    frame = lz4_frame(blk1, blk2, blk3,
+                      header=b"\x04\x22\x4d\x18\x40\x40\xc0")
+    assert _decompress(CODEC_LZ4, frame) == b1 + b2 + b1 + b2 + b"!!!!!"
 
 
 # ------------------------------------------------- truncation (snappy)
 
 def test_snappy_truncated_fields_raise():
     data = b"hello hello hello hello world " * 50
-    framed = snappy_codec.compress(data)
-    raw = snappy_codec._compress_block(data)
+    framed = _compress(CODEC_SNAPPY, data)
+    raw = pa.Codec("snappy").compress(data, asbytes=True)
     for cut in (framed[:9], framed[:14], framed[:20], raw[:1], raw[:3]):
-        with pytest.raises(ValueError):
-            snappy_codec.decompress(cut)
+        with pytest.raises(ValueError, match="snappy"):
+            _decompress(CODEC_SNAPPY, cut)

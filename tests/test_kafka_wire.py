@@ -995,7 +995,6 @@ def test_record_batch_snappy_roundtrip():
     import struct as _struct
 
     from goka_spark.kafka_wire import CODEC_SNAPPY
-    from goka_spark.snappy_codec import XERIAL_MAGIC
     recs = [Record(0, 1_700_000_000_000 + i, f"k{i}".encode(),
                    (f"v{i}" * 50).encode(), [("h", b"x")])
             for i in range(5)]
@@ -1003,7 +1002,7 @@ def test_record_batch_snappy_roundtrip():
     assert _struct.unpack(">h", batch[21:23])[0] & 0x07 == CODEC_SNAPPY
     # records section @61 starts with the xerial magic — the batch
     # header is genuinely uncompressed
-    assert batch[61:69] == XERIAL_MAGIC
+    assert batch[61:69] == b"\x82SNAPPY\x00"
     # repetitive payloads actually shrink
     assert len(batch) < len(encode_record_batch(100, recs))
     got = decode_record_batches(bytes(batch))
@@ -1020,14 +1019,13 @@ def test_record_batch_lz4_roundtrip():
     import struct as _struct
 
     from goka_spark.kafka_wire import CODEC_LZ4
-    from goka_spark.lz4_codec import LZ4_MAGIC
     recs = [Record(0, 1_700_000_000_000 + i, f"k{i}".encode(),
                    (f"v{i}" * 50).encode(), [("h", b"x")])
             for i in range(5)]
     batch = encode_record_batch(100, recs, codec=CODEC_LZ4)
     assert _struct.unpack(">h", batch[21:23])[0] & 0x07 == CODEC_LZ4
     # records section @61 starts with the LZ4 frame magic
-    assert batch[61:65] == LZ4_MAGIC.to_bytes(4, "little")
+    assert batch[61:65] == b"\x04\x22\x4d\x18"
     assert len(batch) < len(encode_record_batch(100, recs))
     got = decode_record_batches(bytes(batch))
     assert [(r.offset, r.key, r.value, r.headers) for r in got] == \
@@ -1046,7 +1044,6 @@ def test_unsupported_codec_typed_both_directions():
 
     from goka_spark.kafka_wire import (CODEC_ZSTD, UnsupportedCodecError,
                                        WireProducer, crc32c)
-    from goka_spark.zstd_codec import ZstdError
     rec = [Record(0, 0, b"k", b"v")]
     with pytest.raises(UnsupportedCodecError, match="unsupported"):
         encode_record_batch(0, rec, codec=7)
@@ -1058,7 +1055,7 @@ def test_unsupported_codec_typed_both_directions():
     # zstd bits over a NON-zstd records section = corruption, typed
     batch[21:23] = _struct.pack(">h", CODEC_ZSTD)
     batch[17:21] = _struct.pack(">I", crc32c(bytes(batch[21:])))
-    with pytest.raises(ZstdError):
+    with pytest.raises(ValueError, match="zstd"):
         decode_record_batches(bytes(batch))
     with pytest.raises(ValueError, match="unknown compression"):
         WireProducer(["127.0.0.1:1"], compression="brotli")

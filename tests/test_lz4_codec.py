@@ -1,102 +1,119 @@
-"""Unit tests for the pure-Python LZ4 codec
-(goka_spark/lz4_codec.py): XXH32 against the spec's reference
-vectors, the block format (lz4_Block_format.md), and the frame
-format (lz4_Frame_format.md) with header/block/content checksums.
-These guard the byte-level layer under the Kafka RecordBatch tests
-in tests/test_kafka_wire.py."""
+"""lz4 through kafka_wire's codec dispatch: the frame format
+(lz4_Frame_format.md) Kafka puts around lz4 blocks, written by our
+frame writer over pyarrow's raw lz4 blocks and read by liblz4's frame
+decoder, plus hand-built blocks from lz4_Block_format.md.  These
+guard the byte-level layer under the Kafka RecordBatch tests in
+tests/test_kafka_wire.py."""
+
+import os
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from goka_spark import lz4_codec as lz
+from goka_spark.kafka_wire import CODEC_LZ4, _compress, _decompress
+from tests.test_wire_codecs import lz4_blocks, lz4_frame
 
 
-def test_xxh32_reference_vectors():
-    # published XXH32 reference values (xxHash spec / cli)
-    assert lz.xxh32(b"") == 0x02CC5D05
-    assert lz.xxh32(b"a") == 0x550D7456
-    assert lz.xxh32(b"abc") == 0x32D153FF
-    # seed changes the hash; self-consistency across the size regimes
-    assert lz.xxh32(b"", 1) != lz.xxh32(b"")
-    assert lz.xxh32(b"0123456789abcdef") != lz.xxh32(b"0123456789abcdeg")
+def compress(data: bytes) -> bytes:
+    return _compress(CODEC_LZ4, data)
+
+
+def decompress(data: bytes) -> bytes:
+    return _decompress(CODEC_LZ4, data)
 
 
 def test_frame_layout():
-    z = lz.compress(b"hello")
-    assert int.from_bytes(z[:4], "little") == lz.LZ4_MAGIC
+    z = compress(b"hello")
+    assert z[:4] == b"\x04\x22\x4d\x18"
     flg, bd = z[4], z[5]
     assert flg >> 6 == 0b01          # frame version
     assert flg & 0x20                # independent blocks
-    assert flg & 0x04                # content checksum present
+    assert not flg & 0x14            # no block / content checksum
     assert (bd >> 4) & 0x7 == 4      # 64 KiB block max
-    # header checksum byte is verified by decompress; corrupt it
+    # the header checksum byte is verified on decode; corrupt it
     bad = bytearray(z)
     bad[6] ^= 0xFF
-    with pytest.raises(ValueError, match="header checksum"):
-        lz.decompress(bytes(bad))
+    with pytest.raises(ValueError, match="lz4.*headerChecksum"):
+        decompress(bytes(bad))
 
 
 def test_roundtrip_and_compression():
     data = b"the quick brown fox jumps over the lazy dog " * 1000
-    z = lz.compress(data)
+    z = compress(data)
     assert len(z) < len(data) // 5
-    assert lz.decompress(z) == data
+    assert decompress(z) == data
 
 
 def test_incompressible_blocks_stored_raw():
-    import os
     data = os.urandom(100_000)       # two blocks, both must store raw
-    z = lz.compress(data)
-    assert lz.decompress(z) == data
+    z = compress(data)
+    assert [stored for _, stored in lz4_blocks(z)] == [True, True]
+    assert decompress(z) == data
     assert len(z) < len(data) + 64   # stored, not expanded
 
 
 def test_multi_block_stream():
     data = bytes(range(256)) * 600   # 150 KiB -> 3 blocks
-    assert lz.decompress(lz.compress(data)) == data
+    z = compress(data)
+    assert len(lz4_blocks(z)) == 3
+    assert decompress(z) == data
 
 
 def test_content_checksum_detects_corruption():
-    z = bytearray(lz.compress(b"abcd" * 100))
-    # flip a bit inside the (single, compressed) block payload
-    z[12] ^= 0x01
-    with pytest.raises(ValueError):
-        lz.decompress(bytes(z))
+    """Frames from other writers may carry a content checksum
+    (FLG 0x64, HC 0xa7; trailing word XXH32(data)): it is verified."""
+    data = b"abcd" * 100
+    (blk, _), = lz4_blocks(compress(data))
+    frame = lz4_frame(blk, header=b"\x04\x22\x4d\x18\x64\x40\xa7") \
+        + (0x6BA4C97F).to_bytes(4, "little")
+    assert decompress(frame) == data
+    for i in (12, len(frame) - 1):   # block payload, checksum word
+        bad = bytearray(frame)
+        bad[i] ^= 0x01
+        with pytest.raises(ValueError, match="lz4"):
+            decompress(bytes(bad))
 
 
 def test_hand_built_block_with_match_and_overlap():
-    # literal "abcdefgh", match len 8 at offset 8, final literals "XY"
+    """Every block ends with at least 5 literals (block format's
+    end-of-block rule, enforced by the reference decoder)."""
+    # literal "abcdefgh", match len 8 at offset 8, final "XYZWV"
     blob = bytearray([(8 << 4) | (8 - 4)])
     blob += b"abcdefgh" + (8).to_bytes(2, "little")
-    blob += bytes([2 << 4]) + b"XY"
-    assert lz._decompress_block(bytes(blob)) == b"abcdefgh" * 2 + b"XY"
-    # overlap RLE: literal "ab", match offset 2 length 10
+    blob += bytes([5 << 4]) + b"XYZWV"
+    assert decompress(lz4_frame(bytes(blob))) == b"abcdefgh" * 2 + b"XYZWV"
+    # overlap RLE: literal "ab", match offset 2 length 10, final "cdefg"
     blob = bytearray([(2 << 4) | (10 - 4)])
-    blob += b"ab" + (2).to_bytes(2, "little") + bytes([0])
-    assert lz._decompress_block(bytes(blob)) == b"ab" * 6
+    blob += b"ab" + (2).to_bytes(2, "little") + bytes([5 << 4]) + b"cdefg"
+    assert decompress(lz4_frame(bytes(blob))) == b"ab" * 6 + b"cdefg"
     # 255-saturated length extension: 20-byte literal via 15+5
     blob = bytearray([15 << 4, 5]) + b"L" * 20
-    assert lz._decompress_block(bytes(blob)) == b"L" * 20
+    assert decompress(lz4_frame(bytes(blob))) == b"L" * 20
 
 
 def test_corrupt_blocks_raise():
-    with pytest.raises(ValueError, match="offset out of range"):
-        # match at offset 5 with nothing decoded yet
-        lz._decompress_block(bytes([(0 << 4) | 0, 5, 0]))
-    with pytest.raises(ValueError, match="run past input"):
-        lz._decompress_block(bytes([(9 << 4)]) + b"ab")
-    with pytest.raises(ValueError, match="bad frame magic"):
-        lz.decompress(b"\x00\x00\x00\x00rest")
+    # match at offset 5 with nothing decoded yet
+    with pytest.raises(ValueError, match="lz4"):
+        decompress(lz4_frame(bytes([(0 << 4) | 0, 5, 0])))
+    # 9 literals declared, 2 present
+    with pytest.raises(ValueError, match="lz4"):
+        decompress(lz4_frame(bytes([(9 << 4)]) + b"ab"))
+    with pytest.raises(ValueError, match="lz4.*frameType"):
+        decompress(b"\x00\x00\x00\x00rest")
+    with pytest.raises(ValueError, match="lz4"):
+        decompress(b"")
 
 
 def test_end_of_block_rules():
-    """The compressor must keep the last 5 bytes literal and start no
-    match in the final 12 bytes — a stream violating that would be
-    rejected by strict reference decoders.  Check on inputs built to
-    tempt a trailing match."""
+    """Every compressed block the writer emits keeps the last 5 bytes
+    literal and starts no match in the final 12 bytes: strict
+    reference decoders reject a stream violating that.  Checked on
+    inputs built to tempt a trailing match."""
     for data in (b"abcdefgh" * 3, b"Q" * 17, b"pattern!" * 2 + b"pat"):
-        blk = lz._compress_block(data)
+        (blk, stored), = lz4_blocks(compress(data))
+        if stored:
+            continue
         # last sequence is literal-only: walk sequences to the end
         pos, last_had_match = 0, False
         while pos < len(blk):
@@ -125,29 +142,29 @@ def test_end_of_block_rules():
                         break
             last_had_match = True
         assert not last_had_match
-        assert lz._decompress_block(blk) == data
+        assert decompress(compress(data)) == data
 
 
 @given(st.binary(max_size=5000))
 @settings(max_examples=200, deadline=None)
 def test_roundtrip_property(data):
-    assert lz.decompress(lz.compress(data)) == data
+    assert decompress(compress(data)) == data
 
 
 @given(st.text(alphabet="abcde \n", max_size=5000))
 @settings(max_examples=100, deadline=None)
 def test_roundtrip_property_compressible(text):
     data = text.encode()
-    assert lz.decompress(lz.compress(data)) == data
+    assert decompress(compress(data)) == data
 
 
 @given(st.data())
 @settings(max_examples=300, deadline=None)
 def test_corrupted_frames_raise_valueerror(data):
     """Truncation/bit-flips must surface as ValueError — never an
-    internal IndexError — so the wire layer's typed-error contract
-    holds for damaged segments too."""
-    base = bytearray(lz.compress(b"hello world compressed data " * 20))
+    internal IndexError or OSError — so the wire layer's typed-error
+    contract holds for damaged segments too."""
+    base = bytearray(compress(b"hello world compressed data " * 20))
     op = data.draw(st.integers(0, 2))
     if op == 0:
         del base[data.draw(st.integers(0, len(base) - 1))]
@@ -157,6 +174,6 @@ def test_corrupted_frames_raise_valueerror(data):
         base[data.draw(st.integers(0, len(base) - 1))] ^= \
             1 << data.draw(st.integers(0, 7))
     try:
-        lz.decompress(bytes(base))  # may still decode (benign flip)
+        decompress(bytes(base))  # may still decode (benign flip)
     except ValueError:
         pass

@@ -1,7 +1,8 @@
-"""zstd decoder (RFC 8878, goka_spark/zstd_codec.py) — golden
-cross-checks against the REAL libzstd bundled in pyarrow's Arrow C++
-build, hand-assembled format-edge vectors, XXH64 reference vectors,
-corruption fuzzing, and the Kafka RecordBatch integration (sarama
+"""zstd through kafka_wire's codec dispatch (libzstd, bundled in
+pyarrow's Arrow C++ build): real frames at every compression level,
+multi-frame and skippable input, hand-assembled RFC 8878 frames, the
+store-mode frames goka_spark's earlier producer wrote, corruption
+fuzzing, and the Kafka RecordBatch integration (sarama
 CompressionZSTD, config.Producer.Compression)."""
 
 import random
@@ -11,42 +12,42 @@ import pytest
 
 import pyarrow as pa
 
-from goka_spark import zstd_codec as Z
+from goka_spark.kafka_wire import (CODEC_ZSTD, Record, _compress,
+                                   _decompress, crc32c,
+                                   decode_record_batches,
+                                   encode_record_batch)
+from tests.test_wire_codecs import CORPUS, fuzz, ids
 
-CORPUS = [
-    b"",
-    b"a",
-    b"hello world",
-    b"hello hello hello hello world world world " * 40,
-    bytes(range(256)) * 300,           # incompressible-ish spread
-    b"\x00" * 100_000,                 # RLE-heavy
-    b"abcdefgh" * 20_000,              # short-period matches
-    ("the quick brown fox jumps over the lazy dog. " * 3000).encode(),
-]
-random.seed(7)
-CORPUS.append(bytes(random.randrange(256) for _ in range(50_000)))
-CORPUS.append(bytes(random.choice(b"abcd") for _ in range(200_000)))
-# kafka-records-shaped payload: keys/values with shared prefixes
-CORPUS.append(b"".join(b"\x00\x10key-%05d\x20value-%07d-payload"
-                       % (i, i * 37) for i in range(5000)))
-
-LEVELS = [1, 3, 6, 9, 15, 19, 22]
+ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
+LEVELS = list(range(1, 23))
 
 
-def _ids(xs):
-    return [f"len{len(x)}" for x in xs]
+def decompress(data: bytes) -> bytes:
+    return _decompress(CODEC_ZSTD, data)
+
+
+def store_frame(data: bytes) -> bytes:
+    """An RFC 8878 frame of raw (stored) blocks of at most 128 KiB:
+    single segment, 8-byte content size, no checksum."""
+    out = bytearray(ZSTD_MAGIC + bytes([0xE0])
+                    + len(data).to_bytes(8, "little"))
+    chunks = [data[i:i + (1 << 17)]
+              for i in range(0, len(data), 1 << 17)] or [b""]
+    for i, chunk in enumerate(chunks):
+        last = i == len(chunks) - 1
+        out += (last | (len(chunk) << 3)).to_bytes(3, "little") + chunk
+    return bytes(out)
 
 
 @pytest.mark.parametrize("level", LEVELS)
 def test_decodes_real_zstd_all_levels(level):
     """Every corpus shape at every compression level: levels change
     the block mix (raw/RLE literals, 1- vs 4-stream Huffman, FSE vs
-    predefined vs repeat sequence modes), so this sweep exercises
-    every decode path against genuine libzstd output."""
+    predefined vs repeat sequence modes)."""
     codec = pa.Codec("zstd", compression_level=level)
     for data in CORPUS:
         comp = codec.compress(data, asbytes=True)
-        assert Z.decompress(comp) == data
+        assert decompress(comp) == data
 
 
 def test_multi_frame_and_skippable():
@@ -55,218 +56,167 @@ def test_multi_frame_and_skippable():
     f2 = c.compress(b"second frame", asbytes=True)
     skip = (0x184D2A50).to_bytes(4, "little") \
         + (7).to_bytes(4, "little") + b"ignored"
-    assert Z.decompress(f1 + skip + f2) == b"first frame second frame"
+    assert decompress(f1 + skip + f2) == b"first frame second frame"
 
 
 def test_truncated_skippable_raises():
-    """r13 (ADVICE): a skippable frame cut short — fewer than 4 size
-    bytes after the magic, or a declared payload longer than the
-    remaining input — must raise the same ZstdError('truncated
-    input') every other truncation path does, never silently accept."""
+    """A skippable frame cut short — fewer than 4 size bytes after
+    the magic, or a declared payload longer than the remaining input
+    — raises like every other truncation, never silently accepts."""
     magic = (0x184D2A50).to_bytes(4, "little")
     # size field itself truncated
-    with pytest.raises(Z.ZstdError, match="truncated"):
-        Z.decompress(magic + b"\x07\x00")
+    with pytest.raises(ValueError, match="zstd.*[Tt]runcated"):
+        decompress(magic + b"\x07\x00")
     # size field complete but payload missing bytes
-    with pytest.raises(Z.ZstdError, match="truncated"):
-        Z.decompress(magic + (7).to_bytes(4, "little") + b"shrt")
+    with pytest.raises(ValueError, match="zstd.*[Tt]runcated"):
+        decompress(magic + (7).to_bytes(4, "little") + b"shrt")
     # and the well-formed empty skippable frame still decodes to b""
-    assert Z.decompress(magic + (0).to_bytes(4, "little")) == b""
+    assert decompress(magic + (0).to_bytes(4, "little")) == b""
 
 
 def test_content_checksum_verified():
-    """pyarrow's zstd emits no checksum; flip the FHD checksum bit
-    and append the XXH64 low word ourselves — the decoder must
-    verify it, and reject a corrupted one."""
+    """pyarrow's zstd emits no checksum; set the FHD checksum bit and
+    append the XXH64 low word (0xa7816d94 for this payload) — the
+    decoder verifies it and rejects a corrupted one."""
     data = b"checksummed payload " * 100
     frame = bytearray(pa.Codec("zstd").compress(data, asbytes=True))
     assert not frame[4] & 0x04
     frame[4] |= 0x04
-    good = bytes(frame) + struct.pack("<I", Z.xxh64(data) & 0xFFFFFFFF)
-    assert Z.decompress(good) == data
+    good = bytes(frame) + struct.pack("<I", 0xA7816D94)
+    assert decompress(good) == data
     bad = good[:-1] + bytes([good[-1] ^ 0xFF])
-    with pytest.raises(Z.ZstdError, match="checksum"):
-        Z.decompress(bad)
+    with pytest.raises(ValueError, match="zstd.*checksum"):
+        decompress(bad)
 
 
 # ------------------------------------------------ hand-built vectors
 
 def _frame(blocks: bytes, fcs: int) -> bytes:
-    """Single-segment frame header (1-byte FCS) + raw block payload."""
-    return Z.ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x20, fcs]) \
-        + blocks
+    """Single-segment frame header (1-byte FCS) + block payload."""
+    return ZSTD_MAGIC + bytes([0x20, fcs]) + blocks
 
 
 def test_raw_block_frame():
     payload = b"raw block only!"
     bh = (1 | (len(payload) << 3)).to_bytes(3, "little")
-    assert Z.decompress(_frame(bh + payload, len(payload))) == payload
+    assert decompress(_frame(bh + payload, len(payload))) == payload
 
 
 def test_rle_block_frame():
     bh = (1 | (1 << 1) | (100 << 3)).to_bytes(3, "little")
-    assert Z.decompress(_frame(bh + b"z", 100)) == b"z" * 100
+    assert decompress(_frame(bh + b"z", 100)) == b"z" * 100
 
 
 def test_reserved_block_rejected():
     bh = (1 | (3 << 1) | (4 << 3)).to_bytes(3, "little")
-    with pytest.raises(Z.ZstdError, match="reserved"):
-        Z.decompress(_frame(bh + b"xxxx", 4))
+    with pytest.raises(ValueError, match="zstd.*corruption"):
+        decompress(_frame(bh + b"xxxx", 4))
 
 
 def test_bad_magic_rejected():
-    with pytest.raises(Z.ZstdError, match="magic"):
-        Z.decompress(b"\x00\x01\x02\x03rest")
+    with pytest.raises(ValueError, match="zstd.*frame descriptor"):
+        decompress(b"\x00\x01\x02\x03rest")
 
 
 def test_dictionary_rejected():
-    """Frames declaring a dictionary ID must be refused, not
-    mis-decoded (we carry no dictionaries)."""
-    hdr = Z.ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x21, 9, 5])
+    """Frames declaring a dictionary ID are refused, not mis-decoded
+    (we carry no dictionaries)."""
+    hdr = ZSTD_MAGIC + bytes([0x21, 9, 5])
     bh = (1 | (1 << 3)).to_bytes(3, "little")
-    with pytest.raises(Z.ZstdError, match="dictionar"):
-        Z.decompress(hdr + bh + b"x")
+    with pytest.raises(ValueError, match="zstd.*Dictionary"):
+        decompress(hdr + bh + b"x")
 
 
 def test_frame_content_size_mismatch_rejected():
     payload = b"abc"
     bh = (1 | (len(payload) << 3)).to_bytes(3, "little")
-    with pytest.raises(Z.ZstdError, match="content size"):
-        Z.decompress(_frame(bh + payload, 99))
+    with pytest.raises(ValueError, match="zstd"):
+        decompress(_frame(bh + payload, 99))
 
 
-# ------------------------------------------------------ store encode
+# ------------------------------------------------ store-mode frames
 
-@pytest.mark.parametrize("data", CORPUS, ids=_ids(CORPUS))
+@pytest.mark.parametrize("data", CORPUS, ids=ids(CORPUS))
 def test_store_mode_roundtrip_and_real_decoder(data):
-    """compress() emits spec-valid store-mode frames: our decoder
-    AND the real libzstd both accept them (wire compatibility is the
-    whole point of the store path)."""
-    frame = Z.compress(data)
-    assert Z.decompress(frame) == data
+    """Store-mode frames (raw blocks, what goka_spark's earlier
+    producer wrote, so topics may still hold them) decode through the
+    dispatch and through libzstd's one-shot API alike."""
+    frame = store_frame(data)
+    assert decompress(frame) == data
     got = pa.Codec("zstd").decompress(
         frame, decompressed_size=len(data), asbytes=True)
     assert got == data
 
 
 def test_store_mode_multiblock():
-    data = bytes(random.randrange(256) for _ in range(300_000))
-    frame = Z.compress(data)  # 3 blocks at the 128 KiB ceiling
-    assert Z.decompress(frame) == data
+    data = bytes(random.Random(7).randrange(256) for _ in range(300_000))
+    frame = store_frame(data)  # 3 blocks at the 128 KiB ceiling
+    assert decompress(frame) == data
     assert pa.Codec("zstd").decompress(
         frame, decompressed_size=len(data), asbytes=True) == data
-
-
-# ------------------------------------------------------------- xxh64
-
-def test_xxh64_reference_vectors():
-    """Published XXH64 vectors (xxHash repository test suite)."""
-    assert Z.xxh64(b"") == 0xEF46DB3751D8E999
-    assert Z.xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert Z.xxh64(b"abc") == 0x44BC2CF5AD770999
 
 
 # ------------------------------------------------------------ fuzzing
 
 def test_corruption_fuzz_never_internal_error():
-    """Randomly corrupted / truncated real frames must raise
-    ZstdError (or decode to a DIFFERENT payload if the flip lands in
-    literal bytes) — never an internal IndexError/KeyError and never
-    a hang."""
-    rng = random.Random(42)
+    """Randomly corrupted / truncated real frames raise ValueError (or
+    decode to a DIFFERENT payload if the flip lands in literal bytes)
+    — never an internal error, never a hang."""
     data = ("structured text with repeats " * 400).encode()
-    base = pa.Codec("zstd", compression_level=6).compress(
-        data, asbytes=True)
-    silent_wrong = 0
-    for trial in range(300):
-        mutated = bytearray(base)
-        if trial % 3 == 0:
-            mutated = mutated[:rng.randrange(1, len(base))]
-        else:
-            for _ in range(rng.randrange(1, 4)):
-                i = rng.randrange(len(mutated))
-                mutated[i] ^= 1 << rng.randrange(8)
-        try:
-            got = Z.decompress(bytes(mutated))
-            if got != data:
-                silent_wrong += 1
-        except Z.ZstdError:
-            pass
-        except ValueError:
-            pass
     # corrupt literal bytes legitimately decode to different output
     # (no checksum in pyarrow frames); anything else must have raised
-    assert silent_wrong < 300
+    assert fuzz(CODEC_ZSTD, data, trials=300, seed=42) < 300
 
 
 # --------------------------------------------- kafka wire integration
 
-def test_record_batch_zstd_real_producer_decodes():
-    """The interop case that matters: a batch whose records section
-    was compressed by REAL libzstd (what an actual sarama/librdkafka
-    zstd producer puts on the wire) decodes through
-    decode_record_batches."""
-    from goka_spark.kafka_wire import (CODEC_ZSTD, Record, crc32c,
-                                       decode_record_batches,
-                                       encode_record_batch)
-    recs = [Record(0, 1_700_000_000_000 + i, f"k{i}".encode(),
+def _records():
+    return [Record(0, 1_700_000_000_000 + i, f"k{i}".encode(),
                    (f"v{i}" * 50).encode(), [("h", b"x")])
             for i in range(5)]
-    plain = bytearray(encode_record_batch(100, recs))
-    section = bytes(plain[61:])  # records section of an uncompressed batch
-    comp = pa.Codec("zstd", compression_level=3).compress(
-        section, asbytes=True)
+
+
+def _with_zstd_section(frame: bytes) -> bytes:
+    """An uncompressed batch of _records() with its records section
+    replaced by ``frame`` and the codec bits, length and CRC fixed."""
+    plain = encode_record_batch(100, _records())
     batch = bytearray(plain[:61])
-    batch += comp
+    batch += frame
     batch[21:23] = struct.pack(">h",
                                (struct.unpack(">h", bytes(batch[21:23]))[0]
                                 & ~0x07) | CODEC_ZSTD)
     batch[8:12] = struct.pack(">i", len(batch) - 12)  # batchLength
     batch[17:21] = struct.pack(">I", crc32c(bytes(batch[21:])))
-    got = decode_record_batches(bytes(batch))
-    assert [(r.offset, r.key, r.value, r.headers) for r in got] == \
-        [(100 + i, f"k{i}".encode(), (f"v{i}" * 50).encode(),
-          [("h", b"x")]) for i in range(5)]
+    return bytes(batch)
+
+
+def _decoded(batch: bytes):
+    return [(r.offset, r.key, r.value, r.headers)
+            for r in decode_record_batches(batch)]
+
+
+_EXPECTED = [(100 + i, f"k{i}".encode(), (f"v{i}" * 50).encode(),
+              [("h", b"x")]) for i in range(5)]
+
+
+def test_record_batch_zstd_real_producer_decodes():
+    """A batch whose records section was compressed by libzstd at
+    another level (what a sarama/librdkafka zstd producer puts on
+    the wire) decodes through decode_record_batches."""
+    section = encode_record_batch(100, _records())[61:]
+    comp = pa.Codec("zstd", compression_level=3).compress(
+        section, asbytes=True)
+    assert _decoded(_with_zstd_section(comp)) == _EXPECTED
 
 
 def test_record_batch_zstd_store_roundtrip():
-    """Our own produce path (store-mode frames) round-trips through
-    the batch codec bits, same layout rules as gzip/snappy/lz4."""
-    from goka_spark.kafka_wire import (CODEC_ZSTD, Record,
-                                       decode_record_batches,
-                                       encode_record_batch)
-    recs = [Record(0, 1_700_000_000_000 + i, f"k{i}".encode(),
-                   (f"v{i}" * 50).encode(), [("h", b"x")])
-            for i in range(5)]
-    batch = encode_record_batch(100, recs, codec=CODEC_ZSTD)
+    """Our own produce path round-trips through the batch codec bits,
+    same layout rules as gzip/snappy/lz4, and a batch holding a
+    store-mode frame (the earlier producer's output) still decodes."""
+    batch = encode_record_batch(100, _records(), codec=CODEC_ZSTD)
     assert struct.unpack(">h", batch[21:23])[0] & 0x07 == CODEC_ZSTD
-    assert batch[61:65] == Z.ZSTD_MAGIC.to_bytes(4, "little")
-    got = decode_record_batches(bytes(batch))
-    assert [(r.offset, r.key, r.value, r.headers) for r in got] == \
-        [(100 + i, f"k{i}".encode(), (f"v{i}" * 50).encode(),
-          [("h", b"x")]) for i in range(5)]
-
-
-def test_oversized_payload_splits_into_bounded_frames(monkeypatch):
-    """Payloads above the default decoder window limit (128 MiB —
-    libzstd ZSTD_WINDOWLOG_LIMIT_DEFAULT=27) must be emitted as a
-    SEQUENCE of single-segment frames, each with implied window ≤ the
-    limit, because conforming decoders may refuse a larger window
-    (r13 ADVICE).  Exercised with a shrunk cap so the test stays
-    byte-cheap; frame boundaries verified by magic count and each
-    frame's content-size header, then round-tripped."""
-    monkeypatch.setattr(Z, "_MAX_FRAME", 1000)
-    data = bytes(range(256)) * 10  # 2560 bytes -> 3 frames
-    enc = Z.compress(data)
-    magic = Z.ZSTD_MAGIC.to_bytes(4, "little")
-    assert enc.count(magic) == 3
-    assert enc[:4] == magic
-    assert Z.decompress(enc) == data
-    # an exact-multiple payload still splits cleanly
-    data2 = b"x" * 2000
-    enc2 = Z.compress(data2)
-    assert enc2.count(magic) == 2
-    assert Z.decompress(enc2) == data2
-    # at or under the cap: exactly one frame, unchanged layout
-    enc3 = Z.compress(b"y" * 1000)
-    assert enc3.count(magic) == 1
+    assert batch[61:65] == ZSTD_MAGIC
+    assert _decoded(bytes(batch)) == _EXPECTED
+    section = encode_record_batch(100, _records())[61:]
+    assert len(_compress(CODEC_ZSTD, section)) < len(section)
+    assert _decoded(_with_zstd_section(store_frame(section))) == _EXPECTED
